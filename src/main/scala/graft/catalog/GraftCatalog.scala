@@ -70,7 +70,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   /** Per-catalog write-permit wait (GraftConf.WriteLockTimeoutSec). */
   private[graft] def writeLockTimeoutSec: Long = writeLockTimeoutSeconds
 
-  /** DV anti-join broadcast ceiling (GraftConf.DvBroadcastKeys). */
+  /** Ceiling on DV keys held on the driver (GraftConf.DvBroadcastKeys). */
   private[graft] def dvBroadcastKeys: Long = dvBroadcastKeyLimit
 
   override def name(): String = catalogName

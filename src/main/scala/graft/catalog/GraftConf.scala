@@ -76,15 +76,18 @@ object GraftConf {
     "seconds a write waits for the per-table write lock before failing (> 0)")
 
   /** Ceiling on the SUMMED deleted-key count of a deletion-vector batch
-    * group before the read-side anti-join stops hinting BROADCAST for
-    * its key side. Below it, every executor holds the keys once and the
-    * data side never shuffles (the MOR fast path). Above it — a broad
-    * MOR DELETE while compaction is behind — forcing the broadcast is a
-    * driver/executor OOM risk, so the planner is left free to pick a
-    * shuffled anti-join instead: same rows, scale-safe. 1M keys ≈ tens
-    * of MB broadcast for typical key types. */
+    * group that a read filters against keys held on the DRIVER. Below
+    * it, the group's sidecars are read once on the driver (cached by
+    * batch token, the cache itself bounded by this count), and the keys
+    * ship with the plan: the data side never joins, shuffles or waits on
+    * an extra job (the MOR fast path). Above it — a broad MOR DELETE
+    * while compaction is behind — holding the keys on the driver is an
+    * OOM risk, so the read anti-joins the sidecars and the planner is
+    * free to shuffle: same rows, scale-safe. 1M keys ≈ tens of MB for
+    * typical key types. The name predates the driver-side filter (it
+    * once bounded a broadcast hint) and is kept for compatibility. */
   val DvBroadcastKeys: Entry[Long] = Entry("dvBroadcastKeys",
     Some(1000000L), _.toLong, (_: Long) > 0L,
-    "max summed deletion-vector keys per batch group that still " +
-      "broadcast-hints the read-side anti-join (> 0)")
+    "max summed deletion-vector keys per batch group that a read " +
+      "filters against keys held on the driver (> 0)")
 }

@@ -113,7 +113,7 @@ case class GenerationMeta(
   * exact data files the batch applies to (the DML scan's read set) —
   * scoping that makes re-inserts of a deleted key visible again (new
   * files are never in `appliesTo`). Read-time application is the
-  * plan-level anti-join [[graft.plans.ResolveDeletionVectors]] splices
+  * plan-level rewrite [[graft.plans.ResolveDeletionVectors]] splices
   * in; compaction folds batches away. */
 case class DvMeta(
     token: String,

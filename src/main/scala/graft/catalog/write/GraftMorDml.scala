@@ -49,7 +49,7 @@ import graft.catalog.{DvMeta, MetaStore, PartitionMeta, Snapshots, TableMeta}
   *  - one [[DvMeta]] entry registered in the descriptor ATOMICALLY with
   *    the insert registrations (the commit's single `updateTable`).
   *
-  * Reads apply the vectors via the plan-level anti-join
+  * Reads apply the vectors via the plan-level rewrite
   * ([[graft.plans.ResolveDeletionVectors]]); compaction folds them.
   *
   * Crash atomicity mirrors the COW `.pending` protocol: a `.delta`
@@ -61,9 +61,11 @@ import graft.catalog.{DvMeta, MetaStore, PartitionMeta, Snapshots, TableMeta}
   * happened or never happened, never "inserts without their deletes".
   *
   * 100 TB posture: DML cost ∝ rows changed + one scan of the candidate
-  * partitions (static partition pruning below); read-time cost is one
-  * broadcast anti-join per unfolded batch, bounded by the compaction
-  * cadence. Reference analogue: none — the reference has no row-level
+  * partitions (static partition pruning below); read-time cost is a
+  * filter against driver-held deleted keys per unfolded batch group
+  * (no extra job or stage while the group fits `dvBroadcastKeys`; a
+  * shuffled anti-join above it), bounded by the compaction cadence.
+  * Reference analogue: none — the reference has no row-level
   * ops at all (V2Table.scala:45-47); this is the beyond-parity lakehouse
   * tier.
   */

@@ -1,14 +1,19 @@
 package graft.plans
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.EqualNullSafe
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, CreateStruct, EqualNullSafe, EqualTo, Expression, Not}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint, LocalRelation, LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LocalRelation, LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 
@@ -25,9 +30,11 @@ import graft.catalog.write.{DvManifest, GraftBatchWrite, GraftMorOperation, Posi
   *
   * {{{
   *   t  ⇒  Union(
-  *     scan(files no batch applies to),                       — untouched
-  *     scan(files of batch group G) LEFT ANTI JOIN keys(G)    — per group
-  *       ON t.key <=> dv.key  [broadcast]
+  *     scan(files no batch applies to),                   — untouched
+  *     Filter(NOT dv_deleted(t.key, keys(G)),             — per group G
+  *            scan(files of G))                             under the ceiling
+  *     scan(files of G) LEFT ANTI JOIN keys(G)            — per group G
+  *       ON t.key = dv.key                                  over the ceiling
   *   )
   * }}}
   *
@@ -35,10 +42,16 @@ import graft.catalog.write.{DvManifest, GraftBatchWrite, GraftMorOperation, Posi
   *  - the clean fragment (the overwhelming majority of files between
   *    compactions) scans EXACTLY as before — vectorized, pushed-down,
   *    pruned; zero per-row overhead;
-  *  - the anti-join's build side is the batch's deleted keys — small by
-  *    the MOR contract (compaction folds batches) — and broadcast, so
-  *    no shuffle of the data side, and AQE/codegen treat it like any
-  *    other join;
+  *  - a group's deleted keys are small by the MOR contract (compaction
+  *    folds batches). While their sum fits the `dvBroadcastKeys`
+  *    ceiling they are read on the driver — once per batch, cached by
+  *    its token — and probed by a [[DeletedKey]] filter inside the
+  *    fragment's own scan stage: no join, no extra job, no stage
+  *    boundary, so a DV'd read plans exactly the stages of a compacted
+  *    read. The keys travel in the stage's task binary;
+  *  - an OVERSIZED group (a broad MOR DELETE while compaction is behind)
+  *    keeps a plain anti-join that the planner may shuffle — the only
+  *    shape that scales past driver memory;
   *  - per-FILE scoping (`appliesTo` = the DML scan's read set) gives
   *    correct sequencing for free: a key deleted in batch v and
   *    re-inserted later lives in a file no batch applies to, so it
@@ -93,13 +106,126 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
           size() > 4096
       })
 
-  /** Drop every cached listing. Called by the crash-REPAIR paths: a
-    * repair moves or deletes data files WITHOUT bumping the descriptor
-    * seq (the crashed commit never published), so a listing cached
-    * before the repair would keep planning the swept files under an
-    * unchanged (dir, seq, tokens) key. Repairs are rare; clearing
-    * everything is the simple correct move. */
-  private[graft] def invalidateListings(): Unit = listingCache.clear()
+  /** One live DV batch as the planner uses it: its parsed manifest (key
+    * declaration, QUALIFIED appliesTo set, sidecar dir, declared key
+    * count) and — once a driver-side filter needed them — its deleted
+    * keys, normalized for [[DeletedKeySet]]. */
+  private final case class DvBatch(
+      token: String, keyColumn: String, appliesTo: Set[String], dir: String,
+      keyCount: Long, keys: Option[Array[Any]] = None) {
+    def held: Long = keys.fold(0L)(_.length.toLong)
+  }
+
+  /** Loaded DV batches by TOKEN. A token is a UUID minted once at
+    * commit, and neither its manifest nor its sidecars are ever
+    * rewritten, so an entry never goes stale — no seq or TTL in the key.
+    * Bounded LRU: the keys held across entries stay under the reading
+    * catalog's `dvBroadcastKeys` ceiling (the same ceiling that admits a
+    * group to the driver-side filter, so one group's keys always fit),
+    * and the entry count under the listing cache's 4096. A planning
+    * pass keeps its own references, so eviction only costs a re-read. */
+  private object batchCache {
+    private val entries = new java.util.LinkedHashMap[String, DvBatch](16, 0.75f, true)
+    private var held = 0L
+
+    def get(token: String): Option[DvBatch] = synchronized(Option(entries.get(token)))
+
+    def put(b: DvBatch, keyBound: Long): Unit = synchronized {
+      Option(entries.put(b.token, b)).foreach(old => held -= old.held)
+      held += b.held
+      val it = entries.entrySet().iterator()
+      while ((held > keyBound || entries.size > 4096) && it.hasNext) {
+        val e = it.next()
+        if (e.getKey != b.token) { held -= e.getValue.held; it.remove() }
+      }
+    }
+
+    def clear(): Unit = synchronized { entries.clear(); held = 0L }
+  }
+
+  /** Drop every cached listing and loaded batch. Called by the
+    * crash-REPAIR paths: a repair moves or deletes data files WITHOUT
+    * bumping the descriptor seq (the crashed commit never published), so
+    * a listing cached before the repair would keep planning the swept
+    * files under an unchanged (dir, seq, tokens) key. Repairs are rare;
+    * clearing everything is the simple correct move. */
+  private[graft] def invalidateListings(): Unit = {
+    listingCache.clear()
+    batchCache.clear()
+  }
+
+  private def refuse(t: GraftTable, what: String, cause: Throwable = null): Nothing =
+    throw new IllegalStateException(
+      s"$what of ${t.name()} is missing or torn — refusing to read " +
+        "(deleted rows would resurface); restore it or roll the table back",
+      cause)
+
+  /** A live batch's manifest, parsed once per token. A missing/torn
+    * manifest refuses the read — serving the rows would resurrect the
+    * deleted keys. */
+  private def loadBatch(
+      t: GraftTable, dv: graft.catalog.DvMeta, conf: Configuration): DvBatch =
+    batchCache.get(dv.token).getOrElse {
+      val (keyCol, applies, keys) = DvManifest.read(conf, dv.manifest)
+        .getOrElse(refuse(t, s"deletion-vector manifest ${dv.manifest}"))
+      val b = DvBatch(dv.token, keyCol,
+        applies.map { s =>
+          val p = new Path(s)
+          p.getFileSystem(conf).makeQualified(p).toString
+        }.toSet,
+        new Path(dv.manifest).getParent.toString, keys)
+      batchCache.put(b, t.graftCatalog.dvBroadcastKeys)
+      b
+    }
+
+  /** Spark's own parquet ROW reader over key sidecars, with the key
+    * schema a `spark.read.schema(keyFields).parquet(dir)` scan would
+    * use. Building one broadcasts the hadoop conf, so a planning pass
+    * builds at most one per key schema, and only when a batch's keys are
+    * not cached yet. */
+  private def sidecarReader(spark: SparkSession, keySchema: StructType): SidecarReader =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, keySchema, new StructType(), keySchema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+
+  private type SidecarReader = PartitionedFile => Iterator[InternalRow]
+
+  /** `b` with its deleted keys, read on the DRIVER without a Spark job.
+    * A missing sidecar dir, an unreadable sidecar, or a row count other
+    * than the manifest's refuses the read. */
+  private def withKeys(
+      t: GraftTable, b: DvBatch, keySchema: StructType,
+      conf: Configuration, read: => SidecarReader): DvBatch =
+    if (b.keys.isDefined) b
+    else {
+      val what = s"deletion-vector key sidecars in ${b.dir}"
+      val dir = new Path(b.dir)
+      val fs = dir.getFileSystem(conf)
+      if (!fs.exists(dir)) refuse(t, what)
+      val files = fs.listStatus(dir).toSeq
+        .filter(s => s.isFile && !hidden(s.getPath.getName))
+      val keyType: DataType =
+        if (keySchema.length == 1) keySchema.head.dataType else keySchema
+      val keys = Array.newBuilder[Any]
+      try files.foreach { f =>
+        read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath),
+          0L, f.getLen, Array.empty, f.getModificationTime, f.getLen))
+          .foreach { row =>
+            // the reader reuses its row: copy before keeping any value
+            val r = row.copy()
+            keys += DeletedKeySet.normalize(
+              if (keySchema.length == 1) r.get(0, keyType) else r, keyType)
+          }
+      } catch { case scala.util.control.NonFatal(e) => refuse(t, what, e) }
+      val loaded = b.copy(keys = Some(keys.result()))
+      if (loaded.held != b.keyCount)
+        refuse(t, s"$what (${loaded.held} keys, manifest declares ${b.keyCount})")
+      batchCache.put(loaded, t.graftCatalog.dvBroadcastKeys)
+      loaded
+    }
+
+  private def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDownWithSubqueries {
@@ -125,7 +251,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
       // check and the new batch's appliesTo), which is what keeps a
       // one-partition DELETE from making every later read anti-join the
       // whole table.
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+      case f: Filter
           if morDelta(f.child).isDefined =>
         val (r, t, op) = morDelta(f.child).get
         f.copy(child = rewrite(r, t, Some(op), Some(f.condition)))
@@ -163,7 +289,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
         }
         if (targetLeft) j.copy(left = newSide) else j.copy(right = newSide)
       // MOR UPDATE / MERGE over LIVE deletion vectors (round 20): the
-      // delta operation's read gets the SAME anti-join split as any other
+      // delta operation's read gets the SAME fragment split as any other
       // read of the table, so hidden rows are never re-emitted (which
       // would resurrect deleted keys) and the hourly-MERGE workload no
       // longer needs a compaction between statements. The operation's
@@ -171,7 +297,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
       // (the conflict check's expected set + the new batch's `appliesTo`)
       // is recorded here from the same universe the fragments scan.
       // DELETE keeps its raw-file delta scan: re-deleting an
-      // already-hidden key is a no-op under the anti-join, and skipping
+      // already-hidden key is a no-op under the split, and skipping
       // the split keeps the static partition pruning it already has.
       case r: DataSourceV2Relation
           if org.apache.spark.sql.graft.GraftSqlBridge
@@ -216,10 +342,19 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
   /** The delta relation inside one side of a MERGE join, with which
     * side holds it. Matches only a BARE relation (the rewrite's initial
     * plan shape) — a relation already wrapped by this rule's output
-    * never re-matches ([[morDelta]] rejects fragment tables). */
+    * never re-matches ([[morDelta]] rejects fragment tables). A relation
+    * directly under a `Filter` is left to the Filter case, which the
+    * top-down walk reaches next: its DML condition keeps feeding the
+    * partition and skip-stats pruning. */
   private def deltaInJoin(j: Join)
       : Option[(DataSourceV2Relation, GraftTable, GraftMorOperation, Boolean)] = {
-    def find(p: LogicalPlan) = p.collectFirst(Function.unlift(morDelta))
+    def find(p: LogicalPlan)
+        : Option[(DataSourceV2Relation, GraftTable, GraftMorOperation)] = p match {
+      case f: Filter if morDelta(f.child).isDefined => None
+      case _ => morDelta(p).orElse(p.children.iterator.map(find).collectFirst {
+        case Some(d) => d
+      })
+    }
     find(j.left).map { case (r, t, op) => (r, t, op, true) }
       .orElse(find(j.right).map { case (r, t, op) => (r, t, op, false) })
   }
@@ -239,7 +374,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
       cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
       r: DataSourceV2Relation,
       src: LogicalPlan): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, ExprId, PredicateHelper}
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ExprId, PredicateHelper}
     import org.apache.spark.sql.catalyst.trees.TreePattern
     object Split extends PredicateHelper {
       def conjuncts(e: Expression): Seq[Expression] = splitConjunctivePredicates(e)
@@ -333,19 +468,8 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
       p.getFileSystem(conf).makeQualified(p).toString
 
     // each live batch's manifest: key column, the qualified data files
-    // it applies to, and the dir holding its deleted-key parquet files.
-    // A missing/torn manifest refuses the read — serving the rows would
-    // resurrect the deleted keys.
-    val batches: Seq[(String, Set[String], String, Long)] =
-      meta.deleteVectors.map { dv =>
-        val (keyCol, applies, keys) = DvManifest.read(conf, dv.manifest).getOrElse(
-          throw new IllegalStateException(
-            s"deletion-vector manifest ${dv.manifest} of ${t.name()} is " +
-              "missing or torn — refusing to read (deleted rows would " +
-              "resurface); restore it or roll the table back"))
-        (keyCol, applies.map(s => qualify(new Path(s))).toSet,
-          new Path(dv.manifest).getParent.toString, keys)
-      }
+    // it applies to, and the dir holding its deleted-key parquet files
+    val batches: Seq[DvBatch] = meta.deleteVectors.map(loadBatch(t, _, conf))
 
     // delta-condition STATIC partition pruning (positional DML, q121): a
     // dir whose spec provably fails the condition holds no matching
@@ -362,7 +486,6 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
     // reads — identity is the ORIGINAL dir + name even when the file now
     // lives in a retirement area), or the live listing per registered
     // directory. Metadata-only planning work, ∝ files in involved dirs.
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
     val universe: Seq[(String, String, Map[String, String], org.apache.hadoop.fs.FileStatus)] =
       t.pinnedResolved match {
         case Some(res) => res.dirs.flatMap { rd =>
@@ -473,7 +596,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
     // the Union's output (= head child's) keeps the original exprIds
     val grouped: Seq[(Seq[Int], Seq[Snapshots.ResolvedDir])] = scanUniverse
       .groupBy { case (id, _, _, _) =>
-        batches.indices.filter(i => batches(i)._2.contains(id))
+        batches.indices.filter(i => batches(i).appliesTo.contains(id))
       }
       .toSeq.sortBy(_._1.mkString(","))
       .map { case (idxs, files) =>
@@ -489,8 +612,10 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
     // (_file, _pos) identity only exists there. Keyed tables keep the
     // round-19 DSv2 split byte-for-byte.
     val positional = graft.catalog.GraftCatalog.morPositional(meta) ||
-      batches.exists(_._1 == PositionalRead.Marker)
+      batches.exists(_.keyColumn == PositionalRead.Marker)
     if (positional) return positionalUnion(spark, r, t, grouped, batches)
+
+    val readers = scala.collection.mutable.Map.empty[StructType, SidecarReader]
 
     val children: Seq[LogicalPlan] = grouped.zipWithIndex.map {
       case ((batchIdxs, dirs), i) =>
@@ -503,39 +628,41 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
         if (batchIdxs.isEmpty) base
         else {
           // the batch's key declaration: one or more comma-separated
-          // columns (a composite key anti-joins on the TUPLE, null-safe
-          // per column — all key columns are NOT NULL by the DDL gate,
-          // so <=> degrades to = for the planner)
+          // columns (a composite key matches on the TUPLE)
           val keyCols =
-            graft.catalog.GraftCatalog.morKeyColumns(batches(batchIdxs.head)._1)
+            graft.catalog.GraftCatalog.morKeyColumns(batches(batchIdxs.head).keyColumn)
           val keyAttrs = keyCols.map(kc =>
             base.output.find(_.name.equalsIgnoreCase(kc))
               .getOrElse(throw new IllegalStateException(
                 s"deletion-vector key '$kc' not in output of ${t.name()}")))
-          val keyFields = keyCols.map(kc => meta.schema.fields
-            .find(_.name.equalsIgnoreCase(kc)).get)
-          // the batch group's deleted keys: tiny parquet sidecars, read
-          // with an explicit schema (no inference round-trip) and —
-          // while the group stays under the dvBroadcastKeys ceiling —
-          // BROADCAST, so the data side never shuffles. An OVERSIZED
-          // group (a broad MOR DELETE with compaction behind) gets no
-          // hint: forcing a multi-GB broadcast is an OOM, and the
-          // planner's shuffled anti-join returns the same rows safely.
-          val keysPlan: LogicalPlan = batchIdxs.map { bi =>
-            spark.read.schema(StructType(keyFields))
-              .parquet(batches(bi)._3)
-              .queryExecution.analyzed
-          }.reduce((a, b) => Union(Seq(a, b), false, false))
-          val groupKeys = batchIdxs.map(bi => batches(bi)._4).sum
-          val hint =
-            if (groupKeys <= t.graftCatalog.dvBroadcastKeys)
-              JoinHint(None, Some(HintInfo(Some(BROADCAST))))
-            else JoinHint.NONE
-          val cond = keyAttrs.zip(keysPlan.output)
-            .map { case (a, k) =>
-              EqualNullSafe(a, k): org.apache.spark.sql.catalyst.expressions.Expression }
-            .reduce(org.apache.spark.sql.catalyst.expressions.And(_, _))
-          Join(base, keysPlan, LeftAnti, Some(cond), hint)
+          val keySchema = StructType(keyCols.map(kc => meta.schema.fields
+            .find(_.name.equalsIgnoreCase(kc)).get))
+          val group = batchIdxs.map(batches)
+          if (group.map(_.keyCount).sum <= t.graftCatalog.dvBroadcastKeys) {
+            // the group's deleted keys fit the ceiling: filter the
+            // fragment in its own scan stage against keys held on the
+            // driver (a struct of the key columns for a composite key)
+            val probe =
+              if (keyAttrs.size == 1) keyAttrs.head else CreateStruct(keyAttrs)
+            val keys = DeletedKeySet(probe.dataType, group.iterator.flatMap(b =>
+              withKeys(t, b, keySchema, conf,
+                readers.getOrElseUpdate(keySchema, sidecarReader(spark, keySchema))).keys.get))
+            Filter(Not(DeletedKey(probe, group.map(_.token))(keys)), base)
+          } else {
+            // an OVERSIZED group (a broad MOR DELETE with compaction
+            // behind) anti-joins its sidecars, read with an explicit
+            // schema (no inference round-trip); the planner is free to
+            // shuffle it — same rows, nothing held on the driver. Plain
+            // `=`: the sidecar read is nullable, so `<=>` would plan a
+            // coalesce/isnull join key pair, and keys are never NULL.
+            val keysPlan: LogicalPlan = group.map { b =>
+              spark.read.schema(keySchema).parquet(b.dir).queryExecution.analyzed
+            }.reduce((a, b) => Union(Seq(a, b), false, false))
+            val cond = keyAttrs.zip(keysPlan.output)
+              .map { case (a, k) => EqualTo(a, k): Expression }
+              .reduce(And(_, _))
+            Join(base, keysPlan, LeftAnti, Some(cond), JoinHint.NONE)
+          }
         }
     }
     children match {
@@ -557,7 +684,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
       r: DataSourceV2Relation,
       t: GraftTable,
       grouped: Seq[(Seq[Int], Seq[Snapshots.ResolvedDir])],
-      batches: Seq[(String, Set[String], String, Long)]): LogicalPlan = {
+      batches: Seq[DvBatch]): LogicalPlan = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, NamedExpression}
     import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.functions.col
@@ -580,7 +707,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
           var df = PositionalRead.filesDf(spark, meta, dirs, withMeta = true)
           if (batchIdxs.nonEmpty)
             df = PositionalRead.applyBatches(df,
-              PositionalRead.keysDf(spark, batchIdxs.map(bi => batches(bi)._3)))
+              PositionalRead.keysDf(spark, batchIdxs.map(bi => batches(bi).dir)))
           val projected =
             df.select(r.output.map(a => col(a.name)): _*).queryExecution.analyzed
           if (i == 0) alignTo(r.output, projected) else projected

@@ -1569,7 +1569,7 @@ object GraftSqlBridge {
     * (`RowLevelOperationTable` is `private[sql]`): the underlying
     * catalog table and the live operation instance. Used by
     * `graft.plans.ResolveDeletionVectors` to give a merge-on-read
-    * UPDATE/MERGE delta read the same deletion-vector anti-join split
+    * UPDATE/MERGE delta read the same deletion-vector split
     * as any other read of the table. */
   def rowLevelOperationTable(
       t: org.apache.spark.sql.connector.catalog.Table)

@@ -2153,7 +2153,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     spark.sql(s"DROP TABLE IF EXISTS $dimT")
   }
 
-  test("DV anti-join broadcast is size-guarded: small batch hints, oversized batch leaves the planner free") {
+  test("DV key filter below the ceiling, shuffled anti-join above it") {
     GraftBootstrap.ensure(spark, sf0001)
     // a second catalog over its own warehouse with a 2-key ceiling, so
     // the guard flips with tiny fixtures
@@ -2169,31 +2169,40 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       s"""CREATE TABLE $t (id BIGINT NOT NULL, v DOUBLE)
          |TBLPROPERTIES ('graft.dml.mode'='merge-on-read',
          |  'graft.dml.key'='id')""".stripMargin)
-    spark.sql(s"INSERT INTO $t SELECT id, CAST(id AS DOUBLE) FROM range(100)")
-    // auto-broadcast off: only the HINT can produce a broadcast join, so
-    // the two shapes below pin the guard itself, not the size estimator
+    // keys offset far from anything a plan prints, so the explain check
+    // below can look for the deleted values themselves
+    val base = 9000000L
+    spark.sql(s"INSERT INTO $t SELECT id + $base, CAST(id AS DOUBLE) FROM range(100)")
+    // auto-broadcast off: the oversized shape below pins the guard
+    // itself, not the size estimator
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // 2 deleted keys ≤ ceiling 2 → hinted broadcast despite threshold -1
-      spark.sql(s"DELETE FROM $t WHERE id IN (1, 2)")
+      // 2 deleted keys ≤ ceiling 2 → a filter against driver-held keys:
+      // no join at all, and no key value in the plan text
+      spark.sql(s"DELETE FROM $t WHERE id IN (${base + 1}, ${base + 2})")
       val small = spark.table(t)
       val p1 = small.queryExecution.executedPlan.toString
-      assert(p1.contains("BroadcastHashJoin") && p1.contains("LeftAnti"),
-        s"small DV batch must broadcast the key side:\n$p1")
+      assert(p1.contains("dv_deleted") &&
+        !p1.contains("BroadcastHashJoin") && !p1.contains("LeftAnti"),
+        s"a DV group under the ceiling must filter, not join:\n$p1")
+      val explained = small.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExtendedMode)
+      assert(!explained.contains(s"${base + 1}") && !explained.contains(s"${base + 2}"),
+        s"the explain string must not print deleted keys:\n$explained")
       assert(small.count() === 98)
-      // stack 3 more keys: the group now sums 5 > 2 → no hint → the
-      // planner (threshold -1) picks a shuffled anti-join — same rows
-      spark.sql(s"DELETE FROM $t WHERE id IN (3, 4, 5)")
+      // stack 3 more keys: the group now sums 5 > 2 → the keys stay off
+      // the driver and the planner (threshold -1) shuffles the anti-join
+      spark.sql(s"DELETE FROM $t WHERE id IN (${base + 3}, ${base + 4}, ${base + 5})")
       val big = spark.table(t)
       val p2 = big.queryExecution.executedPlan.toString
-      assert(!p2.contains("BroadcastHashJoin"),
-        s"oversized DV group must not force a broadcast:\n$p2")
+      assert(!p2.contains("BroadcastHashJoin") && !p2.contains("dv_deleted"),
+        s"an oversized DV group must neither broadcast nor filter on the driver:\n$p2")
       assert(p2.contains("SortMergeJoin") || p2.contains("ShuffledHashJoin"),
-        s"oversized DV group should anti-join via shuffle:\n$p2")
+        s"an oversized DV group should anti-join via shuffle:\n$p2")
       assert(big.count() === 95)
-      assert(big.selectExpr("min(id)").collect().head.getLong(0) === 0L)
-      assert(!big.collect().map(_.getLong(0)).toSet.exists(Set(1L, 2L, 3L, 4L, 5L)),
+      assert(big.selectExpr("min(id)").collect().head.getLong(0) === base)
+      assert(!big.collect().map(_.getLong(0)).toSet.exists((1L to 5L).map(base + _).toSet),
         "both shapes must hide exactly the deleted keys")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)

@@ -564,4 +564,95 @@ class MorDmlSpec extends AnyFunSuite with SparkFixture {
          |  'graft.dml.key'='id,ID')""".stripMargin))
     assert(e.getMessage.contains("twice"), e.getMessage)
   }
+
+  /** Spark jobs `body` starts, counted by a listener scoped to this
+    * thread's job group, and its result. */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    val group = s"mor-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      val out = body
+      org.apache.spark.graft.SuiteHygiene.settle(sc, 10000L)
+      (jobs.get, out)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a read over stacked DV batches runs the jobs of the compacted read") {
+    val composite = freshTable("m_jobs_composite")
+    spark.sql(
+      s"""CREATE TABLE $composite (a BIGINT NOT NULL, b STRING NOT NULL, v DOUBLE)
+         |TBLPROPERTIES ('graft.dml.mode'='merge-on-read', 'graft.dml.key'='a,b')
+         |""".stripMargin)
+    spark.sql(s"INSERT INTO $composite VALUES " +
+      "(1, 'x', 1.0), (1, 'y', 2.0), (2, 'x', 3.0), (2, 'y', 4.0), (3, 'x', 5.0)")
+    spark.sql(s"DELETE FROM $composite WHERE a = 1 AND b = 'y'")
+    spark.sql(s"UPDATE $composite SET v = v * 10 WHERE b = 'x' AND a >= 2")
+    val stringKey = freshTable("m_jobs_string")
+    spark.sql(
+      s"""CREATE TABLE $stringKey (k STRING NOT NULL, v BIGINT, p STRING)
+         |PARTITIONED BY (p)
+         |TBLPROPERTIES ('graft.dml.mode'='merge-on-read', 'graft.dml.key'='k')
+         |""".stripMargin)
+    spark.sql(s"INSERT INTO $stringKey VALUES " +
+      "('k1', 1, 'a'), ('k2', 2, 'a'), ('k3', 3, 'b'), ('k4', 4, 'b'), ('k5', 5, 'c')")
+    spark.sql(s"DELETE FROM $stringKey WHERE k IN ('k1', 'k3')")
+    spark.sql(s"UPDATE $stringKey SET v = -v WHERE k = 'k4'")
+    Seq(composite, stringKey).foreach { t =>
+      assert(meta(t).deleteVectors.size === 2, s"$t must carry two stacked batches")
+      val read = s"SELECT * FROM $t"
+      val (dvJobs, dvRows) = jobsOf(spark.sql(read).collect().toSet)
+      spark.sql(s"CALL ${GraftBootstrap.CatalogName}.sys.compact('$t')")
+      assert(meta(t).deleteVectors.isEmpty)
+      val (compactJobs, compactRows) = jobsOf(spark.sql(read).collect().toSet)
+      assert(dvRows === compactRows, s"$t: compaction must not change the rows")
+      assert(dvJobs === compactJobs,
+        s"$t: the DV'd read ran $dvJobs jobs, the compacted read $compactJobs")
+    }
+    assert(spark.table(composite).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet ===
+      Set((1L, "x", 1.0), (2L, "x", 30.0), (2L, "y", 4.0), (3L, "x", 50.0)))
+    assert(spark.table(stringKey).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet ===
+      Set(("k2", 2L, "a"), ("k4", -4L, "b"), ("k5", 5L, "c")))
+  }
+
+
+  test("a missing DV manifest or key sidecar refuses the read loudly") {
+    val conf = spark.sessionState.newHadoopConf()
+    def refused(t: String): Unit = {
+      val e = intercept[Exception](spark.table(t).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("refusing to read")),
+        s"$t: expected a loud refusal, got $e")
+    }
+    // each table is broken BEFORE its first read, so no cached batch
+    // can stand in for the lost files
+    val noManifest = freshTable("m_lost_manifest")
+    createMor(noManifest)
+    spark.sql(s"DELETE FROM $noManifest WHERE id = 2")
+    val manifest = new Path(meta(noManifest).deleteVectors.head.manifest)
+    manifest.getFileSystem(conf).delete(manifest, false)
+    refused(noManifest)
+    val noSidecar = freshTable("m_lost_sidecar")
+    createMor(noSidecar)
+    spark.sql(s"DELETE FROM $noSidecar WHERE id IN (1, 3)")
+    val dir = new Path(meta(noSidecar).deleteVectors.head.manifest).getParent
+    val fs = dir.getFileSystem(conf)
+    fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .foreach(fs.delete(_, false))
+    refused(noSidecar)
+    Seq(noManifest, noSidecar).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
 }

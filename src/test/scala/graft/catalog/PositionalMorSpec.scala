@@ -233,6 +233,37 @@ class PositionalMorSpec extends AnyFunSuite with SparkFixture {
       (4L, 40.0, "b"), (5L, 50.0, "c")))
   }
 
+  test("a delta Filter under a MERGE-shaped join keeps its partition pruning") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LocalRelation}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    import org.apache.spark.sql.types.LongType
+    val t = freshTable("p_join_filter")
+    createPos(t)
+    // the analyzed (never executed) UPDATE: its delta read is
+    // Filter(p = 'a', relation over the row-level operation)
+    val analyzed = spark.sessionState.analyzer.executeAndCheck(
+      spark.sessionState.sqlParser.parsePlan(s"UPDATE $t SET v = v + 1 WHERE p = 'a'"),
+      new org.apache.spark.sql.catalyst.QueryPlanningTracker)
+    val bridge = org.apache.spark.sql.graft.GraftSqlBridge
+    val (filter, op) = analyzed.collectFirst {
+      case f @ Filter(_, r: DataSourceV2Relation) if bridge.rowLevelOperationTable(r.table).isDefined =>
+        (f, bridge.rowLevelOperationTable(r.table).get._2
+          .asInstanceOf[graft.catalog.write.GraftMorOperation])
+    }.getOrElse(fail(s"no delta Filter in the analyzed UPDATE:\n$analyzed"))
+    // wrap it in a join whose condition says nothing about partitions:
+    // the Filter's own condition must still scope the delta read
+    val id = filter.output.find(_.name == "id").get
+    val src = AttributeReference("src_id", LongType)()
+    val join = Join(filter, LocalRelation(src), Inner, Some(EqualTo(id, src)), JoinHint.NONE)
+    val rewritten = graft.plans.ResolveDeletionVectors(join)
+    assert(op.scannedSpecs === Some(Seq(Map("p" -> "a"))),
+      s"the delta read under the join lost its condition's pruning: ${op.scannedSpecs}")
+    assert(rewritten.collectFirst { case j: Join => j.left }
+      .exists(_.isInstanceOf[Filter]), s"the Filter must stay above the rewritten read:\n$rewritten")
+  }
+
   test("snapshot-lineage stream source serves positional tables (initial state + cdc)") {
     val t = freshTable("p_stream")
     createPos(t)
