@@ -95,10 +95,7 @@ object Bench {
     def resetSuiteState(): Double = {
       val t0 = System.nanoTime()
       slotNo.incrementAndGet()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      org.apache.spark.graft.SuiteHygiene.drain(spark.sparkContext)
-      org.apache.spark.graft.SuiteHygiene.settle(spark.sparkContext)
+      org.apache.spark.graft.SuiteHygiene.reset(spark.sparkContext)
       (System.nanoTime() - t0) / 1e9
     }
 

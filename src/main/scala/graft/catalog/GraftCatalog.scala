@@ -995,7 +995,7 @@ object GraftCatalog {
 
   /** Is a table's bucket declaration one the engine WRITES (hash-routed
     * per-bucket files, SPJ-reportable layout — see GraftWrite /
-    * GraftBucketedFileScan)? True for any SINGLE-column bucket spec —
+    * GraftBucketLayout)? True for any SINGLE-column bucket spec —
     * unpartitioned (q100) or combined with identity partitions (q103,
     * the standard 100 TB fact layout: `PARTITIONED BY (date) CLUSTERED
     * BY (key) INTO n BUCKETS`, time pruning + key SPJ from one table).

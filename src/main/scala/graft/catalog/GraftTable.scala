@@ -291,6 +291,18 @@ class GraftTable(
     val skipCols = (SkipStats.resolvedCols(meta.properties, meta.schema) ++
       SkipStats.resolvedBloomCols(meta.properties, meta.schema))
       .map(_.name).distinct
+    // the layout claims every wrapper below shares (GraftLayoutSpec).
+    // The bucket column is never a skipping column: runtime bucket
+    // pruning already owns it. Snapshot reads claim no layout.
+    val layout =
+      if (pinned.isDefined) org.apache.spark.sql.graft.GraftLayoutSpec()
+      else {
+        val bucket = GraftCatalog.writableBucketSpec(meta)
+        val skipping = skipCols.filterNot(c =>
+          bucket.exists(b => spark.sessionState.conf.resolver(c, b._2)))
+        org.apache.spark.sql.graft.GraftLayoutSpec(bucket, trustedSortCols, skipping,
+          if (skipping.nonEmpty) Some((meta.schema, meta.properties)) else None)
+      }
     val builder = meta.provider match {
       case "parquet" => ParquetScanBuilder(spark, index, meta.schema, meta.dataSchema, opts)
       case "csv" => CSVScanBuilder(spark, index, meta.schema, meta.dataSchema, opts)
@@ -298,26 +310,20 @@ class GraftTable(
       case "orc" => org.apache.spark.sql.execution.datasources.v2.orc.OrcScanBuilder(
         spark, index, meta.schema, meta.dataSchema, opts)
       // avro ships with NO DSv2 scan (V1 AvroFileFormat only) — it reads
-      // through the generic FileFormat-backed scan: column pruning +
-      // static partition pruning, no DPP/runtime filters (the R12
-      // any-SerDe delegation, HiveFilePartitionReaderFactory.scala:43-154).
-      // A BUCKETED avro table gets the same read-side fast paths as the
-      // columnar providers: the writable bucket spec rides into the
-      // generic scan, which recovers ids from file names for bucket
-      // pruning and (composite-)keyed SPJ reporting — see
-      // GraftFormatScan's bucket surface.
+      // through the generic FileFormat-backed scan: column pruning,
+      // static partition pruning and runtime (DPP) partition and
+      // skipping filters (the R12 any-SerDe delegation,
+      // HiveFilePartitionReaderFactory.scala:43-154). A BUCKETED avro
+      // table gets the same read-side fast paths as the columnar
+      // providers through the shared layout component: bucket ids from
+      // file names for bucket pruning and (composite-)keyed SPJ
+      // reporting — see GraftBucketLayout.
       case "avro" => return new org.apache.spark.sql.graft.GraftFormatScanBuilder(
         spark, org.apache.spark.sql.graft.GraftSqlBridge.avroFileFormat(),
         index, meta.schema,
         GraftCatalog.optionProps(meta.properties) ++
           scala.jdk.CollectionConverters.MapHasAsScala(options).asScala,
-        bucket = if (pinned.isDefined) None else GraftCatalog.writableBucketSpec(meta),
-        sortedBy = if (pinned.isDefined) Nil else trustedSortCols,
-        skippingCols = if (pinned.isDefined) Nil else skipCols,
-        skipMeta =
-          if (pinned.isEmpty && skipCols.nonEmpty)
-            Some((meta.schema, meta.properties))
-          else None)
+        layout)
       case other => throw new IllegalStateException(s"unsupported provider $other")
     }
     // Partitioned tables scan through the runtime-filtering wrapper:
@@ -340,7 +346,7 @@ class GraftTable(
     // KeyGroupedPartitioning(bucket(n, col)) — prefixed with the
     // identity transforms when the table is ALSO partitioned (q103's
     // composite layout) — for zero-exchange co-laid-out joins; see
-    // GraftBucketedFileScan. Default-conf un-narrowed scans keep the
+    // GraftBucketLayout. Default-conf un-narrowed scans keep the
     // stock planning unchanged. The bucket wrapper subsumes graft.spj
     // (its keys carry the partition values too), so `bucket` wins when
     // both are declared.
@@ -371,31 +377,17 @@ class GraftTable(
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics])
       }
     if (pinned.isDefined) return builder
-    GraftCatalog.writableBucketSpec(meta) match {
-      case Some((n, col)) =>
-        // the skipping/bloom columns join the BUCKETED scan's runtime
-        // surface too (q117): a selective dim join on a NON-key column
-        // of the composite layout empties provably-excluded files out
-        // of the latched keyed groups — the bucket column itself is
-        // excluded (runtime bucket pruning already owns it)
-        val nonKeySkip = skipCols.filterNot(c =>
-          spark.sessionState.conf.resolver(c, col))
-        new org.apache.spark.sql.graft.GraftScanBuilder(builder,
-          meta.partitionColumns, bucket = Some((n, col)), tableStats = v2Stats,
-          sortedBy = trustedSortCols,
-          skippingCols = nonKeySkip,
-          skipMeta =
-            if (nonKeySkip.nonEmpty) Some((meta.schema, meta.properties))
-            else None)
-      case _ if meta.isPartitioned =>
-        new org.apache.spark.sql.graft.GraftScanBuilder(builder,
-          meta.partitionColumns, spj = spjProp, tableStats = v2Stats,
-          skippingCols = if (spjProp) Nil else skipCols)
-      case _ if v2Stats.isDefined || skipCols.nonEmpty =>
-        new org.apache.spark.sql.graft.GraftScanBuilder(builder, Nil,
-          tableStats = v2Stats, skippingCols = skipCols)
-      case _ => builder
-    }
+    // the skipping/bloom columns join the BUCKETED scan's runtime
+    // surface too (q117): a selective dim join on a NON-key column of
+    // the composite layout empties provably-excluded files out of the
+    // latched keyed groups. An identity-SPJ scan offers none.
+    if (layout.bucket.isDefined || meta.isPartitioned)
+      new org.apache.spark.sql.graft.GraftScanBuilder(builder,
+        meta.partitionColumns, spj = spjProp, tableStats = v2Stats, layout = layout)
+    else if (v2Stats.isDefined || skipCols.nonEmpty)
+      new org.apache.spark.sql.graft.GraftScanBuilder(builder, Nil,
+        tableStats = v2Stats, layout = layout)
+    else builder
   }
 
   // --- write -------------------------------------------------------------

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.graft.SuiteHygiene
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -67,22 +68,14 @@ object TimeQueries {
     val plansDir = sys.env.get("SPARK_GRAFT_PROBE_PLANS")
     plansDir.foreach(d => new java.io.File(d).mkdirs())
 
-    // Experiment knob for the Bench suite-state hygiene fix: what (if
-    // anything) to do between queries. none|async|blocking|gc|blockinggc
-    val resetMode = sys.env.getOrElse("SPARK_GRAFT_PROBE_RESET", "none")
-    def reset(): Unit = {
-      if (resetMode.startsWith("async") || resetMode.startsWith("blocking"))
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = resetMode.startsWith("blocking")))
-      if (resetMode.endsWith("gc")) System.gc()
-    }
-
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
       def run(): Unit =
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       run() // warm-up
-      reset()
+      // the bench's between-windows reset, so a probe times what the
+      // bench times
+      SuiteHygiene.reset(spark.sparkContext)
       plansDir.foreach { d =>
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -100,10 +93,10 @@ object TimeQueries {
           // listener is async; drain the bus deterministically so the
           // just-finished pass's stage events are all counted (r21
           // ADVICE: a fixed sleep under-counted on busy runs)
-          org.apache.spark.graft.SuiteHygiene.settle(spark.sparkContext)
+          SuiteHygiene.settle(spark.sparkContext)
           bestStats = (stages.get, tasks.get, taskMs.get)
         }
-        reset()
+        SuiteHygiene.reset(spark.sparkContext)
       }
       println(f"[probe] $name%-36s ${best}%7.2f s  stages=${bestStats._1}%3d " +
         f"tasks=${bestStats._2}%5d taskTime=${bestStats._3 / 1000.0}%8.2f s")

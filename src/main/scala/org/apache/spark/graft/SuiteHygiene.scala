@@ -5,10 +5,11 @@ import scala.util.control.NonFatal
 import org.apache.spark.{MapOutputTrackerMaster, SparkContext, SparkEnv}
 import org.apache.spark.storage.BroadcastBlockId
 
-/** SYNCHRONOUS suite-state hygiene for the bench harness (round-21
-  * verdict, "Next round" #1): everything [[graft.Bench.resetSuiteState]]
-  * does must COMPLETE before the next timed window opens — never async
-  * work that can bleed in.
+/** SYNCHRONOUS suite-state hygiene for the bench harnesses (round-21
+  * verdict, "Next round" #1): everything [[reset]] does must COMPLETE
+  * before the next timed window opens — never async work that can
+  * bleed in. [[graft.Bench]] and [[graft.tools.TimeQueries]] both reset
+  * through it between timed windows.
   *
   * Round 21's reset relied on `System.gc()` every 25 slots to make
   * ContextCleaner notice dead shuffle/broadcast references. That design
@@ -40,6 +41,14 @@ import org.apache.spark.storage.BroadcastBlockId
   * Best-effort by design: a failure to drain must never fail the
   * bench. */
 object SuiteHygiene {
+
+  /** The between-windows reset: blocking unpersist of every persistent
+    * RDD, then [[drain]], then [[settle]]. */
+  def reset(sc: SparkContext): Unit = {
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    drain(sc)
+    settle(sc)
+  }
 
   /** Drain dead shuffle and broadcast state, synchronously. Skipped
     * when a streaming query is active (its in-flight state is not

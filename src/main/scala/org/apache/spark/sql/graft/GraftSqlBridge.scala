@@ -79,15 +79,10 @@ class GraftScanBuilder(
     inner: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder,
     partitionCols: Seq[String],
     spj: Boolean = false,
-    bucket: Option[(Int, String)] = None,
     tableStats: Option[(java.util.OptionalLong,
       java.util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics])] = None,
-    sortedBy: Seq[String] = Nil,
-    skippingCols: Seq[String] = Nil,
-    // (table schema, table properties) for the BUCKETED scan's runtime
-    // file/bloom skipping — the shard evaluation needs both (q117)
-    skipMeta: Option[(StructType, Map[String, String])] = None)
+    layout: GraftLayoutSpec = GraftLayoutSpec())
   extends org.apache.spark.sql.connector.read.ScanBuilder
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -113,10 +108,10 @@ class GraftScanBuilder(
       case _ => false
     }
   override def build(): Scan = {
-    val scan = bucket match {
-      case Some((n, col)) =>
-        new GraftBucketedFileScan(inner.build().asInstanceOf[FileScan], n, col,
-          partitionCols, sortedBy, skippingCols, skipMeta)
+    val scan = layout.bucket match {
+      case Some(_) =>
+        new GraftBucketedFileScan(inner.build().asInstanceOf[FileScan],
+          partitionCols, layout)
       case None if spj =>
         new GraftSpjFileScan(inner.build().asInstanceOf[FileScan], partitionCols)
       case None =>
@@ -125,7 +120,7 @@ class GraftScanBuilder(
         // LISTS runtime narrowing may rebuild, and their own key-based
         // pruning already serves the join-key case
         new GraftFileScan(inner.build().asInstanceOf[FileScan], partitionCols,
-          skippingCols)
+          layout.skippingCols)
     }
     tableStats.foreach { case (rows, cols) => scan.withTableStats(rows, cols) }
     scan
@@ -139,8 +134,7 @@ class GraftFileScan(
   extends org.apache.spark.sql.connector.read.SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
   with org.apache.spark.sql.internal.connector.SupportsMetadata {
-  import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, Literal}
-  import org.apache.spark.sql.connector.expressions.{FieldReference, LiteralValue, NamedReference}
+  import org.apache.spark.sql.connector.expressions.{FieldReference, NamedReference}
   import org.apache.spark.sql.connector.expressions.filter.Predicate
   import org.apache.spark.sql.connector.read.{Batch, Statistics}
   import org.apache.spark.sql.execution.datasources.v2.FileScan
@@ -325,93 +319,45 @@ class GraftFileScan(
     offered.map(FieldReference(_)).toArray
   }
 
+  /** The planner's runtime `IN`/`=` predicates, translated against the
+    * partition schema (→ partition filters, pruning the catalog
+    * partition list before any listing) and against the skipping
+    * columns (→ DATA filters for the listing's skip-stats evaluation;
+    * partition columns take the partition path, never both). */
   override def filter(predicates: Array[Predicate]): Unit = {
-    val exprs = predicates.toSeq.flatMap(toPartitionFilter)
-    if (exprs.nonEmpty) current = withPartitionFilters(current, exprs)
-    val dataExprs = predicates.toSeq.flatMap(toSkippingFilter)
-    if (dataExprs.nonEmpty) current = withDataFilters(current, dataExprs)
+    def translate(schema: StructType) =
+      predicates.toSeq.flatMap(GraftSqlBridge.runtimeValueFilter(_, schema))
+    val resolver = SQLConf.get.resolver
+    val skipSchema = StructType(readSchema().fields.filter(f =>
+      skippingCols.exists(resolver(_, f.name)) &&
+        !partitionCols.exists(resolver(_, f.name))))
+    val partition = translate(initial.fileIndex.partitionSchema)
+    val data = translate(skipSchema)
+    if (partition.nonEmpty || data.nonEmpty)
+      current = withFilters(current, partition, data)
   }
 
-  private def partitionField(ref: NamedReference) : Option[StructField] =
-    ref.fieldNames match {
-      case Array(n) => initial.fileIndex.partitionSchema.fields
-        .find(f => SQLConf.get.resolver(f.name, n))
-      case _ => None
-    }
-
-  /** The planner's runtime filters arrive as `IN`/`=` over LiteralValues
-    * (`DataSourceV2Strategy.translateRuntimeFilterV2`); values are
-    * catalyst-internal, so `Literal(v, dt)` is the exact inverse. */
-  protected def toPartitionFilter(
-      p: Predicate): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    def attr(f: StructField) = AttributeReference(f.name, f.dataType)()
-    (p.name, p.children) match {
-      case ("IN", Array(r: NamedReference, vs @ _*))
-          if vs.forall(_.isInstanceOf[LiteralValue[_]]) =>
-        partitionField(r).map(f => In(attr(f),
-          vs.map { case lv: LiteralValue[_] => Literal(lv.value, lv.dataType) }))
-      case ("=", Array(r: NamedReference, lv: LiteralValue[_])) =>
-        partitionField(r).map(f => EqualTo(attr(f), Literal(lv.value, lv.dataType)))
-      case _ => None
-    }
-  }
-
-  /** Runtime `IN`/`=` over a skipping (data) column → a catalyst data
-    * filter for the rebuilt scan's LISTING. Partition columns take the
-    * partition-filter path instead (never both). Protected: the bucketed
-    * subclass routes the same translations through its post-latch
-    * emptied-group mechanism instead of a listing rebuild. */
-  protected def toSkippingFilter(
-      p: Predicate): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    def skipField(ref: NamedReference): Option[StructField] = ref.fieldNames match {
-      case Array(n) if skippingCols.exists(SQLConf.get.resolver(_, n)) &&
-          !partitionCols.exists(SQLConf.get.resolver(_, n)) =>
-        readSchema().fields.find(f => SQLConf.get.resolver(f.name, n))
-      case _ => None
-    }
-    def attr(f: StructField) = AttributeReference(f.name, f.dataType)()
-    (p.name, p.children) match {
-      case ("IN", Array(r: NamedReference, vs @ _*))
-          if vs.forall(_.isInstanceOf[LiteralValue[_]]) =>
-        skipField(r).map(f => In(attr(f),
-          vs.map { case lv: LiteralValue[_] => Literal(lv.value, lv.dataType) }))
-      case ("=", Array(r: NamedReference, lv: LiteralValue[_])) =>
-        skipField(r).map(f => EqualTo(attr(f), Literal(lv.value, lv.dataType)))
-      case _ => None
-    }
-  }
-
-  private def withPartitionFilters(
+  /** `s` with extra partition and DATA filters. Extra data filters drive
+    * only the listing (the catalog index's skip-stats evaluation); the
+    * reader's pushed filters are untouched — the join itself re-applies
+    * the predicate, so an unevaluated filter costs I/O, never rows. */
+  private def withFilters(
       s: FileScan,
-      extra: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): FileScan =
+      partition: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      data: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): FileScan =
     s match {
       case p: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan =>
-        p.copy(partitionFilters = p.partitionFilters ++ extra)
+        p.copy(partitionFilters = p.partitionFilters ++ partition,
+          dataFilters = p.dataFilters ++ data)
       case c: org.apache.spark.sql.execution.datasources.v2.csv.CSVScan =>
-        c.copy(partitionFilters = c.partitionFilters ++ extra)
+        c.copy(partitionFilters = c.partitionFilters ++ partition,
+          dataFilters = c.dataFilters ++ data)
       case j: org.apache.spark.sql.execution.datasources.v2.json.JsonScan =>
-        j.copy(partitionFilters = j.partitionFilters ++ extra)
+        j.copy(partitionFilters = j.partitionFilters ++ partition,
+          dataFilters = j.dataFilters ++ data)
       case o: org.apache.spark.sql.execution.datasources.v2.orc.OrcScan =>
-        o.copy(partitionFilters = o.partitionFilters ++ extra)
-      case other => other // unknown format: skip pruning, stay correct
-    }
-
-  /** Extra DATA filters drive only the listing (the catalog index's
-    * skip-stats evaluation); the reader's pushed filters are untouched
-    * — the join itself re-applies the predicate, so an unevaluated
-    * filter costs I/O, never rows. */
-  private def withDataFilters(
-      s: FileScan,
-      extra: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): FileScan =
-    s match {
-      case p: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan =>
-        p.copy(dataFilters = p.dataFilters ++ extra)
-      case c: org.apache.spark.sql.execution.datasources.v2.csv.CSVScan =>
-        c.copy(dataFilters = c.dataFilters ++ extra)
-      case j: org.apache.spark.sql.execution.datasources.v2.json.JsonScan =>
-        j.copy(dataFilters = j.dataFilters ++ extra)
-      case o: org.apache.spark.sql.execution.datasources.v2.orc.OrcScan =>
-        o.copy(dataFilters = o.dataFilters ++ extra)
+        o.copy(partitionFilters = o.partitionFilters ++ partition,
+          dataFilters = o.dataFilters ++ data)
       case other => other // unknown format: skip pruning, stay correct
     }
 
@@ -460,7 +406,6 @@ class GraftSpjFileScan(
   import org.apache.spark.sql.connector.expressions.Expressions
   import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
   import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
-  import org.apache.spark.sql.execution.PartitionedFileUtil
   import org.apache.spark.sql.execution.datasources.PartitionedFile
 
   /** Key-grouped planning engages only when the session actually runs
@@ -476,11 +421,11 @@ class GraftSpjFileScan(
 
   private lazy val grouped: Seq[(InternalRow, Array[PartitionedFile])] = {
     val scan = currentScan
+    val splitValues = GraftBucketLayout.readValues(
+      initial0.fileIndex.partitionSchema, initial0.readPartitionSchema)
     scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters).map { dir =>
-      val files = dir.files.flatMap(f =>
-        PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = false,
-          maxSplitBytes = Long.MaxValue, partitionValues = dir.values)).toArray
-      (dir.values, files)
+      (dir.values,
+        dir.files.flatMap(GraftBucketLayout.wholeFile(_, splitValues(dir.values))).toArray)
     }
   }
 
@@ -529,143 +474,192 @@ class GraftSpjFileScan(
   * layout as `KeyGroupedPartitioning(bucket(n, col))` with one split
   * per data FILE, each carrying its bucket id as the partition key.
   *
-  * COMPOSITE layout (q103): when the table is ALSO identity-partitioned
-  * (`PARTITIONED BY (p) CLUSTERED BY (col) INTO n BUCKETS` — the
-  * standard 100 TB fact layout), `partitionCols` is non-empty and every
-  * file's key becomes `(partition values…, bucket id)`, reported as
-  * `KeyGroupedPartitioning(identity(p)…, bucket(n, col))`. Partition
-  * pruning (static AND runtime DPP, via the inherited
-  * SupportsRuntimeV2Filtering surface) narrows the listing before
-  * bucket parsing; bucket pruning narrows within it; a co-laid-out join
-  * on (p…, col) aligns group-to-group with no exchange on either side.
+  * The layout itself (bucket ids from file names, bucket pruning,
+  * composite keys, late runtime filters, ordering and split planning)
+  * is [[GraftBucketLayout]], shared with the avro scan. This class adds
+  * what is particular to the columnar providers: the listing is the
+  * delegated `FileScan`'s, rebuilt by runtime filters that arrive
+  * before the layout latches, and un-narrowed scans keep that scan's
+  * stock planning. The reference implements nothing comparable (its
+  * Hive write builder refuses bucketed writes outright). */
+class GraftBucketedFileScan(
+    initial0: org.apache.spark.sql.execution.datasources.v2.FileScan,
+    partitionCols: Seq[String],
+    layoutSpec: GraftLayoutSpec)
+  extends GraftFileScan(initial0, partitionCols, layoutSpec.skippingCols)
+  with org.apache.spark.sql.connector.read.SupportsReportPartitioning
+  with org.apache.spark.sql.connector.read.SupportsReportOrdering {
+  import org.apache.spark.sql.connector.expressions.{NamedReference, SortOrder}
+  import org.apache.spark.sql.connector.expressions.filter.Predicate
+  import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
+  import org.apache.spark.sql.connector.read.partitioning.Partitioning
+
+  private val layout = new GraftBucketLayout(layoutSpec,
+    initial0.fileIndex.partitionSchema, initial0.readPartitionSchema,
+    org.apache.spark.sql.SparkSession.active,
+    listing = () => {
+      val scan = currentScan
+      scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters)
+    },
+    staticFilters = initial0.dataFilters)
+
+  override def filterAttributes(): Array[NamedReference] =
+    layout.filterAttributes(readSchema().fieldNames)
+
+  override def filter(predicates: Array[Predicate]): Unit = {
+    super.filter(predicates) // pre-latch arrivals narrow the listing itself
+    layout.filter(predicates)
+  }
+
+  override def outputPartitioning(): Partitioning = layout.outputPartitioning
+
+  override def outputOrdering(): Array[SortOrder] =
+    layout.outputOrdering(readSchema().fieldNames)
+
+  override def toBatch: Batch =
+    if (!layout.ownsPlanning) super.toBatch
+    else new Batch {
+      override def planInputPartitions(): Array[InputPartition] =
+        layout.planSplits(p => currentScan.isSplitable(p))
+      override def createReaderFactory(): PartitionReaderFactory =
+        currentScan.createReaderFactory()
+    }
+}
+
+/** A table's read-side layout claims, built once per scan builder by
+  * `GraftTable.newScanBuilder` and carried unchanged into the scan:
+  *  - `bucket`: the writable `CLUSTERED BY (col) INTO n BUCKETS` spec;
+  *  - `sortedBy`: cluster columns the catalog's sort-trust marker lets a
+  *    scan treat as a per-file sort order;
+  *  - `skippingCols`: declared skipping/bloom columns offered for
+  *    runtime file skipping — never the bucket column, whose runtime
+  *    values prune buckets instead;
+  *  - `skipMeta`: (table schema, table properties) for the runtime shard
+  *    evaluation; defined exactly when `skippingCols` is non-empty.
+  * The default claims nothing (snapshot reads, row-level rewrites). */
+final case class GraftLayoutSpec(
+    bucket: Option[(Int, String)] = None,
+    sortedBy: Seq[String] = Nil,
+    skippingCols: Seq[String] = Nil,
+    skipMeta: Option[(StructType, Map[String, String])] = None)
+
+/** The bucket layout of ONE scan, composed by both bucket-aware scans:
+  * [[GraftBucketedFileScan]] (parquet/csv/json/orc) and
+  * [[GraftFormatScan]] (avro). The scan supplies what differs between
+  * them — `readPartSchema` (the partition columns its reader expects in
+  * each split), `listing` (its post-pushdown file listing, read once
+  * when the layout latches) and `staticFilters` (its pushed data
+  * filters) — and keeps its own stock planning, reader factory and
+  * statistics.
   *
-  * The bucket id is recovered from the FILE NAME: the bucketed write
-  * path shuffles rows with `HashPartitioning(col, n)` (see
+  * BUCKET IDS come from FILE NAMES: the bucketed write path shuffles
+  * rows with `HashPartitioning(col, n)` (see
   * [[graft.catalog.write.GraftWrite.requiredDistribution]]) and the
   * committer names each task's files `part-<shufflePartitionId>-…`, so
   * the name prefix IS the bucket id — no per-file metadata, no footer
   * reads. Every write path preserves the invariant (append, overwrite,
   * compaction and COW rewrites all route through the same required
-  * distribution), and the reference implements nothing comparable (it
-  * refuses bucketed writes outright,
-  * /root/reference/.../HiveFileFormatWriteBuilder.scala:124-136).
+  * distribution). Safety valve: if ANY live file's name doesn't parse
+  * as a bucket id below `n` (e.g. an EXTERNAL location carrying foreign
+  * files), the layout reports no partitioning, prunes nothing and
+  * leaves the scan's stock planning — a wrongly TRUSTED bucket id would
+  * silently drop rows, whereas falling back only costs I/O.
+  *
+  * COMPOSITE layout (q103): when the table is ALSO identity-partitioned
+  * (`PARTITIONED BY (p) CLUSTERED BY (col) INTO n BUCKETS` — the
+  * standard 100 TB fact layout), every file's key becomes `(partition
+  * values…, bucket id)`, reported as
+  * `KeyGroupedPartitioning(identity(p)…, bucket(n, col))`. Partition
+  * pruning narrows the listing before bucket parsing; bucket pruning
+  * narrows within it; a co-laid-out join on (p…, col) aligns
+  * group-to-group with no exchange on either side.
   *
   * BUCKET PRUNING rides the same machinery in EVERY session (no conf
   * needed): equality/IN predicates on the bucket key narrow the file
   * set to the matching buckets before planning — a point lookup reads
-  * 1/n of the table (see [[allowedBuckets]]), the win V1 bucketed
-  * tables get from `BucketingUtils.getBucketIdFromValue`.
-  *
-  * Safety valve: if ANY live file's name doesn't parse as a bucket id
-  * below `n` (e.g. an EXTERNAL location carrying foreign files), the
-  * scan reports no partitioning, prunes nothing, and plans the stock
-  * splits — a wrongly TRUSTED bucket id would silently drop rows,
-  * whereas falling back only costs I/O. Same conf latch as the
-  * identity SPJ scan: without `spark.sql.sources.v2.bucketing.enabled`
-  * the stock (bin-packed, intra-bucket-parallel) planning is used,
-  * except when pruning narrows the set (then bin-packed splits over
-  * only the allowed buckets' files). */
-class GraftBucketedFileScan(
-    initial0: org.apache.spark.sql.execution.datasources.v2.FileScan,
-    numBuckets: Int,
-    bucketCol: String,
-    partitionCols: Seq[String] = Nil,
-    sortedBy: Seq[String] = Nil,
-    // RUNTIME FILE/BLOOM SKIPPING on non-key columns (q117): the
-    // skipping columns join the runtime-filter surface (inherited
-    // filterAttributes); pre-latch arrivals narrow the listing through
-    // the inherited dataFilters rebuild, post-latch arrivals evaluate
-    // against the skip-stats shards and EMPTY excluded files (the
-    // late-DPP mechanism) so the keyed group count stays contractual.
-    skippingCols: Seq[String] = Nil,
-    skipMeta: Option[(StructType, Map[String, String])] = None)
-  extends GraftFileScan(initial0, partitionCols, skippingCols)
-  with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-  with org.apache.spark.sql.connector.read.SupportsReportOrdering {
+  * 1/n of the table, the win V1 bucketed tables get from
+  * `BucketingUtils.getBucketIdFromValue`. Keyed planning needs
+  * `spark.sql.sources.v2.bucketing.enabled`; without it the scan keeps
+  * its stock (bin-packed, intra-bucket-parallel) planning, except when
+  * pruning narrows the set (then bin-packed splits over only the
+  * allowed buckets' files). */
+final class GraftBucketLayout(
+    spec: GraftLayoutSpec,
+    partSchema: StructType,
+    readPartSchema: StructType,
+    spark: org.apache.spark.sql.SparkSession,
+    listing: () => Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory],
+    staticFilters: Seq[Expression]) {
+  import GraftBucketLayout._
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.expressions.{Expressions, LiteralValue, NamedReference}
-  import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
+  import org.apache.spark.sql.connector.expressions.{Expressions, FieldReference, NamedReference, SortDirection, SortOrder}
+  import org.apache.spark.sql.connector.expressions.filter.Predicate
+  import org.apache.spark.sql.connector.read.InputPartition
   import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
-  import org.apache.spark.sql.execution.PartitionedFileUtil
-  import org.apache.spark.sql.execution.datasources.PartitionedFile
+  import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, PartitionDirectory, PartitionedFile}
 
+  /** Latched at first use, so planning's `outputPartitioning` and
+    * execution's `planInputPartitions` can never disagree if the conf
+    * flips mid-query. */
   private lazy val spjActive: Boolean = SQLConf.get.v2BucketingEnabled
 
-  private val BucketName = "^part-(\\d+)-".r
-
-  /** BUCKET PRUNING: equality/IN predicates on the bucket column narrow
-    * the readable bucket set — a point lookup reads 1/n of the table's
-    * files, the I/O win V1 bucketed tables get from
-    * `BucketingUtils.getBucketIdFromValue`. Sound because the write
-    * invariant puts every row with key v in bucket pmod(murmur3(v), n)
-    * (same hash as [[GraftBucketBound]]); a `key = NULL` literal prunes
-    * to zero files, which matches its empty SQL semantics. Conjuncts
-    * that are not a bare attribute vs literal (casts, expressions) are
-    * ignored — pruning is an optimization, never a row filter (the
-    * pushed data filters still run in the reader). None = no narrowing. */
-  private def allowedBuckets: Option[Set[Int]] =
-    GraftSqlBridge.bucketSetFromFilters(
-      currentScan.dataFilters, bucketCol, numBuckets)
-
-  /** (bucketId, file status, partition values) per live data file, or
-    * None when any file name fails to parse (foreign layout — never
-    * trust, always fall back). Statuses (not pre-built splits) so each
-    * batch branch below can split on its own terms: whole-file for the
-    * keyed SPJ path, format-splittable for the pruning-only path.
-    * Latched with the post-pushdown listing, like the SPJ snapshot. */
-  private lazy val parsed: Option[Seq[(Int,
-      org.apache.spark.sql.execution.datasources.FileStatusWithMetadata,
-      InternalRow)]] = {
-    val scan = currentScan
-    val files = scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters)
-      .flatMap(dir => dir.files.map(f => (f, dir.values)))
-    val tagged = files.map { case (f, pv) =>
+  /** (bucket id, file status, partition values) per live data file, or
+    * None when the table is unbucketed or any file name fails to parse
+    * (foreign layout — never trust, always fall back). Statuses (not
+    * pre-built splits) so each planning branch can split on its own
+    * terms: whole-file for the keyed path, format-splittable for the
+    * pruning-only path. Latched with the listing. */
+  private lazy val parsed: Option[Seq[BucketFile]] = spec.bucket.flatMap { case (n, _) =>
+    val tagged = listing().flatMap(d => d.files.map(f =>
       BucketName.findFirstMatchIn(f.getPath.getName)
-        .map(_.group(1).toInt).filter(_ < numBuckets).map(b => (b, f, pv))
-    }
+        .map(_.group(1).toInt).filter(_ < n).map(b => (b, f, d.values))))
     if (tagged.forall(_.isDefined)) Some(tagged.map(_.get)) else None
   }
 
-  /** The live (bucket-pruned) file set: [[allowedBuckets]] applied to
-    * the parsed listing. Both `outputPartitioning` and the batches
-    * below derive from this one value, so the planner's group count and
-    * execution's splits can never disagree. */
-  private lazy val pruned: Option[Seq[(Int,
-      org.apache.spark.sql.execution.datasources.FileStatusWithMetadata,
-      InternalRow)]] =
-    parsed.map { fs =>
-      allowedBuckets match {
-        case Some(allowed) => fs.filter { case (b, _, _) => allowed.contains(b) }
-        case None => fs
-      }
-    // an EMPTY keyed set (empty table, or contradictory conjuncts whose
-    // allowed buckets intersect to nothing) falls back to the stock
-    // planning: a KeyGroupedPartitioning with zero partition values is
-    // an edge Spark's SPJ path has no contract for, and the stock scan
-    // of the same (possibly empty) file set is always correct — the
-    // fallback costs I/O only on the contradictory-predicate case,
-    // where the reader's own filters still return zero rows
-    }.filter(_.nonEmpty)
+  /** BUCKET PRUNING: the static allowed-bucket set. Sound because the
+    * write invariant puts every row with key v in bucket
+    * pmod(murmur3(v), n) (same hash as [[GraftBucketBound]]); a
+    * `key = NULL` literal prunes to zero files, which matches its empty
+    * SQL semantics. Conjuncts that are not a bare attribute vs literal
+    * (casts, expressions) are ignored — pruning is an optimization,
+    * never a row filter (the pushed data filters still run in the
+    * reader). None = no narrowing. */
+  private lazy val allowed: Option[Set[Int]] = spec.bucket.flatMap { case (n, col) =>
+    GraftSqlBridge.bucketSetFromFilters(staticFilters, col, n)
+  }
 
-  /** Partition schema latched from the INITIAL scan (constant across
-    * runtime-filter rebuilds — filters never change the table's
-    * partition columns). Drives both the reported identity transforms
-    * and the per-file key rows, so field ORDER always agrees. */
-  private lazy val partSchema = initial0.fileIndex.partitionSchema
+  /** The live (bucket-pruned) file set: [[allowed]] applied to the
+    * parsed listing. `outputPartitioning` and the planning below all
+    * derive from this one value, so the planner's group count and
+    * execution's splits can never disagree. */
+  private lazy val pruned: Option[Seq[BucketFile]] =
+    parsed.map(fs => allowed.fold(fs)(a => fs.filter { case (b, _, _) => a.contains(b) }))
+      // an EMPTY keyed set (empty table, or contradictory conjuncts whose
+      // allowed buckets intersect to nothing) falls back to the stock
+      // planning: a KeyGroupedPartitioning with zero partition values is
+      // an edge Spark's SPJ path has no contract for, and the stock scan
+      // of the same (possibly empty) file set is always correct — the
+      // fallback costs I/O only on the contradictory-predicate case,
+      // where the reader's own filters still return zero rows
+      .filter(_.nonEmpty)
 
   private lazy val keyExprs: Array[org.apache.spark.sql.connector.expressions.Expression] =
     (partSchema.fields.map(f => Expressions.identity(f.name):
-        org.apache.spark.sql.connector.expressions.Expression) :+
-      (Expressions.bucket(numBuckets, bucketCol):
-        org.apache.spark.sql.connector.expressions.Expression)).toArray
+        org.apache.spark.sql.connector.expressions.Expression) ++
+      spec.bucket.map { case (n, col) =>
+        Expressions.bucket(n, col): org.apache.spark.sql.connector.expressions.Expression
+      }).toArray
 
   /** One file's grouping key: `(partition values…, bucket id)` —
     * `InternalRow(b)` in the unpartitioned case. Values are COPIED out
     * of the listing's row (which may be unsafe/reused) so row equality
-    * inside BatchScanExec's grouping is structural. */
+    * inside BatchScanExec's grouping is structural. Field order follows
+    * `partSchema`, as do the reported identity transforms. */
   private def keyRow(b: Int, pv: InternalRow): InternalRow =
     if (partSchema.isEmpty) InternalRow(b)
     else InternalRow.fromSeq(pv.toSeq(partSchema) :+ b)
+
+  private val splitValues = readValues(partSchema, readPartSchema)
 
   /** Runtime (DPP) partition predicates that arrive AFTER the keyed
     * snapshot latched. The planner read `outputPartitioning` during
@@ -678,9 +672,9 @@ class GraftBucketedFileScan(
     * excluded are simply never read. At 100 TB this is the composite
     * table's fact⋈dim case: date-partitioned + key-bucketed fact joined
     * to a filtered date dim skips whole directories even though the
-    * scan also reports bucket alignment for fact⋈fact joins. */
-  @volatile private var lateFilters:
-    Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil
+    * scan also reports bucket alignment for fact⋈fact joins. Without
+    * the key contract the excluded files drop outright. */
+  @volatile private var lateFilters: Seq[Expression] = Nil
 
   /** RUNTIME BUCKET PRUNING: bucket ids hashed from a runtime (DPP)
     * filter's key values — a selective dim join prunes fact BUCKETS the
@@ -694,9 +688,8 @@ class GraftBucketedFileScan(
   @volatile private var lateBuckets: Option[Set[Int]] = None
 
   /** RUNTIME FILE SKIPPING on NON-key columns (q117): runtime `IN`/`=`
-    * filters over declared skipping/bloom columns that arrive AFTER the
-    * keyed snapshot latched. Evaluated per FILE against the
-    * per-directory skip-stats shards at `planInputPartitions` — a file
+    * filters over declared skipping/bloom columns, evaluated per FILE
+    * against the per-directory skip-stats shards at planning — a file
     * whose recorded range (or bloom) provably excludes every key EMPTIES
     * out of its group, exactly like [[lateFilters]]' directories and
     * [[lateBuckets]]' buckets. At 100 TB this closes the composite
@@ -706,59 +699,66 @@ class GraftBucketedFileScan(
     * ranges/blooms are the index the layout lacks). Advisory end to
     * end: no shard entry keeps the file, the join re-applies the
     * predicate. */
-  @volatile private var lateSkip:
-    Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil
+  @volatile private var lateSkip: Seq[Expression] = Nil
 
-  /** The bucket column joins the partition columns as a runtime-filter
-    * target (same output-presence guard — PartitionPruning resolves
-    * these against the scan output with a THROWING resolver). The
-    * skipping columns ride the inherited surface. */
-  override def filterAttributes(): Array[NamedReference] = {
-    val base = super.filterAttributes()
-    val out = readSchema().fieldNames
-    if (out.exists(SQLConf.get.resolver(_, bucketCol)))
-      base :+ org.apache.spark.sql.connector.expressions.FieldReference(bucketCol)
-    else base
+  /** The columns the skipping filters bind against: declared skipping
+    * columns that are neither partition nor bucket keys (those have
+    * their own pruning surfaces). Empty without `skipMeta`. */
+  private lazy val skipSchema: StructType = spec.skipMeta.fold(new StructType()) {
+    case (schema, _) =>
+      val resolver = SQLConf.get.resolver
+      StructType(schema.fields.filter(f =>
+        spec.skippingCols.exists(resolver(_, f.name)) &&
+          !partSchema.fieldNames.exists(resolver(_, f.name)) &&
+          !spec.bucket.exists(b => resolver(b._2, f.name))))
   }
 
-  /** `=`/`IN` literal values over the bucket column → their bucket-id
-    * set (`translateRuntimeFilterV2` emits exactly these shapes; values
-    * are catalyst-internal, matching the hash's expectation). */
-  private def bucketIdsFromV2(
-      p: org.apache.spark.sql.connector.expressions.filter.Predicate): Option[Set[Int]] =
-    GraftSqlBridge.bucketIdsFromRuntimePredicate(p, bucketCol, numBuckets)
+  /** Runtime-filter targets: the partition columns, the skipping
+    * columns and the bucket column, each only when present in the scan
+    * output `out` (the output-presence guard of
+    * [[GraftFileScan.filterAttributes]]). */
+  def filterAttributes(out: Array[String]): Array[NamedReference] = {
+    def present(c: String) = out.exists(SQLConf.get.resolver(_, c))
+    (partSchema.fieldNames.toSeq ++ skipSchema.fieldNames ++ spec.bucket.map(_._2))
+      .filter(present).map(FieldReference(_): NamedReference).toArray
+  }
 
-  override def filter(predicates: Array[
-      org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    super.filter(predicates) // pre-latch arrivals narrow the listing itself
+  /** Accumulates the planner's runtime predicates into the late state:
+    * partition values, bucket ids (intersected across predicates and
+    * calls) and skipping-column values. Unknown shapes are ignored. */
+  def filter(predicates: Array[Predicate]): Unit = {
     if (partSchema.nonEmpty)
-      lateFilters = lateFilters ++ predicates.toSeq.flatMap(toPartitionFilter)
-    val sets = predicates.toSeq.flatMap(bucketIdsFromV2)
-    if (sets.nonEmpty) {
-      val s = sets.reduce(_ intersect _)
-      lateBuckets = Some(lateBuckets.fold(s)(_ intersect s))
+      lateFilters = lateFilters ++ predicates.toSeq.flatMap(
+        GraftSqlBridge.runtimeValueFilter(_, partSchema))
+    spec.bucket.foreach { case (n, col) =>
+      val sets = predicates.toSeq.flatMap(
+        GraftSqlBridge.bucketIdsFromRuntimePredicate(_, col, n))
+      if (sets.nonEmpty) {
+        val s = sets.reduce(_ intersect _)
+        lateBuckets = Some(lateBuckets.fold(s)(_ intersect s))
+      }
     }
-    if (skipMeta.isDefined)
-      lateSkip = lateSkip ++ predicates.toSeq.flatMap(toSkippingFilter)
+    if (skipSchema.nonEmpty)
+      lateSkip = lateSkip ++ predicates.toSeq.flatMap(
+        GraftSqlBridge.runtimeValueFilter(_, skipSchema))
   }
+
+  /** Partition-value survivor test compiled from [[lateFilters]]. */
+  private def lateKeep(): InternalRow => Boolean =
+    GraftSqlBridge.compilePartitionPredicate(lateFilters, partSchema)
 
   /** Survivor test compiled from [[lateSkip]]: qualified-path membership
     * in the skip-stats-filtered file set (one shard read per involved
     * directory, memoized inside applySkipping). Identity when no late
     * skipping filter arrived. Any failure keeps every file. */
   private def lateSkipKeep(
-      fs: Seq[(Int, org.apache.spark.sql.execution.datasources.FileStatusWithMetadata,
-        InternalRow)]):
-      org.apache.spark.sql.execution.datasources.FileStatusWithMetadata => Boolean = {
+      files: Seq[(FileStatusWithMetadata, InternalRow)]): FileStatusWithMetadata => Boolean = {
     val filters = lateSkip
-    skipMeta match {
+    spec.skipMeta match {
       case Some((schema, props)) if filters.nonEmpty =>
         try {
-          val survivors = graft.catalog.SkipStats.applySkipping(
-            org.apache.spark.sql.SparkSession.active, schema, props,
-            fs.map { case (_, f, pv) =>
-              org.apache.spark.sql.execution.datasources.PartitionDirectory(pv, Seq(f))
-            }, filters)
+          val survivors = graft.catalog.SkipStats.applySkipping(spark, schema, props,
+            files.map { case (f, pv) => PartitionDirectory(pv, Seq(f)) }, filters)
             .iterator.flatMap(_.files).map(_.getPath.toString).toSet
           f => survivors.contains(f.getPath.toString)
         } catch { case scala.util.control.NonFatal(_) => _ => true }
@@ -766,19 +766,10 @@ class GraftBucketedFileScan(
     }
   }
 
-  /** Partition-value predicate compiled from [[lateFilters]] — bound by
-    * NAME to the partition schema's positions and interpreted (no
-    * codegen: it runs once per file at planning). Any binding or eval
-    * failure keeps the file: pruning is an optimization, never a row
-    * filter. */
-  private def lateKeep(): InternalRow => Boolean =
-    GraftSqlBridge.compilePartitionPredicate(lateFilters, partSchema)
-
-  override def outputPartitioning(): Partitioning =
+  def outputPartitioning: Partitioning =
     if (spjActive && pruned.isDefined)
       new KeyGroupedPartitioning(keyExprs,
-        pruned.get.map { case (b, _, pv) => (b, pv.toSeq(partSchema)) }
-          .distinct.size)
+        pruned.get.map { case (b, _, pv) => (b, pv.toSeq(partSchema)) }.distinct.size)
     else new UnknownPartitioning(0)
 
   /** SORT-FREE MERGE JOINS (`SupportsReportOrdering`): under the
@@ -786,8 +777,8 @@ class GraftBucketedFileScan(
     * by `sortedBy` (the engine's write path orders partition cols first,
     * then the cluster cols — so within one file, whose partition values
     * are constant, rows ascend by the cluster cols). Reported ONLY when
-    * the keyed (SPJ) batch path is active: there each input partition is
-    * ONE whole file, so the per-partition ordering claim is exactly the
+    * the keyed (SPJ) path is active: there each input partition is ONE
+    * whole file, so the per-partition ordering claim is exactly the
     * per-file invariant — the stock path bin-packs unrelated files into
     * a partition and may split one file into ranges, where no such claim
     * holds. When `BatchScanExec` groups several same-key splits into one
@@ -799,7 +790,7 @@ class GraftBucketedFileScan(
     * at 100 TB the full cost of the join collapses to aligned streaming
     * reads of pre-sorted buckets.
     *
-    * The reported sequence adapts to the projection (the rule's
+    * The reported sequence adapts to the projection `out` (the rule's
     * `toCatalystOrdering` resolves refs against the scan OUTPUT with a
     * throwing resolver — the filterAttributes lesson): with every
     * partition column still in the output the write's full
@@ -810,86 +801,116 @@ class GraftBucketedFileScan(
     * join — the cluster cols alone are reported, valid because partition
     * values are CONSTANT within a keyed group. Either way only the
     * longest prefix present in the output is claimed. */
-  override def outputOrdering(): Array[
-      org.apache.spark.sql.connector.expressions.SortOrder] =
-    if (sortedBy.isEmpty || !spjActive || pruned.isEmpty)
-      Array.empty
+  def outputOrdering(out: Array[String]): Array[SortOrder] =
+    if (spec.sortedBy.isEmpty || !spjActive || pruned.isEmpty) Array.empty
     else {
-      val out = readSchema().fieldNames
       def present(c: String) = out.exists(SQLConf.get.resolver(_, c))
+      val partCols = partSchema.fieldNames.toSeq
       val candidate =
-        if (partitionCols.nonEmpty && partitionCols.forall(present))
-          partitionCols ++ sortedBy
-        else sortedBy
+        if (partCols.nonEmpty && partCols.forall(present)) partCols ++ spec.sortedBy
+        else spec.sortedBy
       candidate.takeWhile(present).map(c =>
-        Expressions.sort(Expressions.identity(c),
-          org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-        .toArray
+        Expressions.sort(Expressions.identity(c), SortDirection.ASCENDING)).toArray
     }
 
-  override def toBatch: Batch = (pruned, spjActive) match {
-    case (Some(fs), true) => new Batch {
+  /** Whether [[planSplits]] plans the scan: the keyed path under SPJ, or
+    * a bucket-narrowed (static or runtime) file set without it. False
+    * (un-narrowed, unbucketed, empty or foreign listing) leaves the
+    * scan's stock planning. Forces the listing. */
+  def ownsPlanning: Boolean =
+    pruned.isDefined && (spjActive || allowed.isDefined || lateBuckets.isDefined)
+
+  /** The layout's input partitions; `isSplitable` is the provider's
+    * own test. Late runtime filters (partition values, bucket ids,
+    * shard-excluded files) exclude a file on either path. */
+  def planSplits(isSplitable: org.apache.hadoop.fs.Path => Boolean): Array[InputPartition] = {
+    val fs = pruned.get
+    val keep = lateKeep()
+    val bKeep = lateBuckets
+    val sKeep = lateSkipKeep(fs.map { case (_, f, pv) => (f, pv) })
+    def live(b: Int, f: FileStatusWithMetadata, pv: InternalRow) =
+      keep(pv) && bKeep.forall(_.contains(b)) && sKeep(f)
+    if (spjActive)
       // per-file WHOLE splits (a split spanning two buckets would break
       // the key contract): BatchScanExec groups key-equal splits, and
-      // partially-clustered planning can leave a hot bucket un-grouped
-      override def planInputPartitions(): Array[InputPartition] = {
-        val keep = lateKeep()
-        val bKeep = lateBuckets
-        val sKeep = lateSkipKeep(fs)
-        fs.zipWithIndex.map { case ((b, f, pv), i) =>
-          // late-DPP-excluded groups keep their KEY with an empty file
-          // list (see lateFilters / lateBuckets / lateSkip): group count
-          // preserved, I/O skipped — partition-value, bucket-id AND
-          // per-file range/bloom runtime pruning ride the same
-          // emptied-group mechanism
-          val files =
-            if (keep(pv) && bKeep.forall(_.contains(b)) && sKeep(f))
-              PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = false,
-                maxSplitBytes = Long.MaxValue, partitionValues = pv).toArray
-            else Array.empty[PartitionedFile]
-          new GraftKeyedFilePartition(i, files, keyRow(b, pv)): InputPartition
-        }.toArray
+      // partially-clustered planning can leave a hot bucket un-grouped.
+      // Late-excluded files keep their group's KEY with an empty file
+      // list: group count preserved, I/O skipped
+      fs.zipWithIndex.map { case ((b, f, pv), i) =>
+        val files =
+          if (live(b, f, pv)) wholeFile(f, splitValues(pv)) else Array.empty[PartitionedFile]
+        new GraftKeyedFilePartition(i, files, keyRow(b, pv)): InputPartition
+      }.toArray
+    else
+      // no key contract without SPJ: excluded files simply drop
+      // (BatchScanExec re-plans through a fresh toBatch after filter(),
+      // so this also serves a purely-runtime narrowing with no static
+      // bucket predicate), and the rest re-split on the format's own
+      // terms — a point lookup on a bucket held in ONE large file keeps
+      // the intra-file parallelism the stock path would give it
+      packSplits(spark, fs.collect {
+        case (b, f, pv) if live(b, f, pv) => PartitionDirectory(splitValues(pv), Seq(f))
+      }, isSplitable)
+  }
+
+  /** `dirs` narrowed by the late partition and skipping filters — for a
+    * scan whose stock planning reads a listing that runtime filters
+    * never rebuilt. */
+  def lateNarrow(dirs: Seq[PartitionDirectory]): Seq[PartitionDirectory] = {
+    val keep = lateKeep()
+    val kept = dirs.filter(d => keep(d.values))
+    val sKeep = lateSkipKeep(kept.flatMap(d => d.files.map(f => (f, d.values))))
+    kept.map(d => d.copy(files = d.files.filter(sKeep)))
+  }
+}
+
+object GraftBucketLayout {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.connector.read.InputPartition
+  import org.apache.spark.sql.execution.PartitionedFileUtil
+  import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory, PartitionedFile}
+
+  private type BucketFile = (Int, FileStatusWithMetadata, InternalRow)
+
+  /** The committer's file-name prefix, `part-<bucket id>-`. */
+  private val BucketName = "^part-(\\d+)-".r
+
+  /** A split's partition values: the listing's full values narrowed to
+    * `readPartSchema`, the partition columns the reader materializes (a
+    * `FileScan` reader appends only the columns the query reads, in
+    * partition-schema order, as stock `FileScan.partitions` projects
+    * them). Passing the full values to such a reader would fill a read
+    * column with an earlier, unread column's value. Copied, so the
+    * listing's row may be reused. */
+  def readValues(partSchema: StructType, readPartSchema: StructType): InternalRow => InternalRow =
+    if (readPartSchema.fieldNames.sameElements(partSchema.fieldNames)) identity
+    else {
+      val resolver = SQLConf.get.resolver
+      val fields = readPartSchema.fields.map { r =>
+        val i = partSchema.fields.indexWhere(p => resolver(p.name, r.name))
+        (i, partSchema.fields(i).dataType)
       }
-      override def createReaderFactory(): PartitionReaderFactory =
-        currentScan.createReaderFactory()
+      pv => InternalRow.fromSeq(fields.map { case (i, dt) => pv.get(i, dt) }.toSeq).copy()
     }
-    // bucket pruning pays WITHOUT the SPJ confs too: a narrowed bucket
-    // set plans splits over only the allowed buckets' files (the stock
-    // path would read every file). No key contract to preserve here, so
-    // the files re-split on the format's own terms — a point lookup on
-    // a bucket held in ONE large file keeps the intra-file parallelism
-    // the stock path would give it. Un-narrowed scans keep the stock
-    // planning entirely.
-    case (Some(fs0), false) if allowedBuckets.isDefined || lateBuckets.isDefined =>
-      new Batch {
-      override def planInputPartitions(): Array[InputPartition] = {
-        // no key contract without SPJ: runtime-pruned buckets' (and
-        // skip-excluded) files are simply dropped (BatchScanExec
-        // re-plans through a fresh toBatch after filter(), so this
-        // branch also serves a purely-runtime narrowing with no static
-        // bucket predicate)
-        val sKeep = lateSkipKeep(fs0)
-        val fs = fs0.filter { case (b, f, _) =>
-          lateBuckets.forall(_.contains(b)) && sKeep(f) }
-        val session = org.apache.spark.sql.SparkSession.active
-        val scan = currentScan
-        val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
-          .maxSplitBytes(session, fs.map { case (_, f, pv) =>
-            org.apache.spark.sql.execution.datasources.PartitionDirectory(pv, Seq(f))
-          })
-        val splits = fs.flatMap { case (_, f, pv) =>
-          PartitionedFileUtil.splitFiles(f, f.getPath,
-            isSplitable = scan.isSplitable(f.getPath),
-            maxSplitBytes = maxSplit, partitionValues = pv)
-        }.sortBy(_.length)(Ordering[Long].reverse)
-        org.apache.spark.sql.execution.datasources.FilePartition
-          .getFilePartitions(session, splits, maxSplit)
-          .toArray[InputPartition]
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        currentScan.createReaderFactory()
-    }
-    case _ => super.toBatch
+
+  /** One file as ONE split: a keyed partition must never see a range. */
+  def wholeFile(f: FileStatusWithMetadata, pv: InternalRow): Array[PartitionedFile] =
+    PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = false,
+      maxSplitBytes = Long.MaxValue, partitionValues = pv).toArray
+
+  /** Spark's stock file-split planning over `dirs`: split each file on
+    * `isSplitable`'s terms, largest first, bin-packed to the session's
+    * max split size. */
+  def packSplits(
+      spark: org.apache.spark.sql.SparkSession,
+      dirs: Seq[PartitionDirectory],
+      isSplitable: org.apache.hadoop.fs.Path => Boolean): Array[InputPartition] = {
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = dirs.flatMap(dir => dir.files.flatMap(f =>
+      PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = isSplitable(f.getPath),
+        maxSplitBytes = maxSplit, partitionValues = dir.values)))
+      .sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(spark, splits, maxSplit).toArray[InputPartition]
   }
 }
 
@@ -931,12 +952,7 @@ class GraftFormatScanBuilder(
     index: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex,
     fullSchema: StructType,
     options: Map[String, String],
-    bucket: Option[(Int, String)] = None,
-    sortedBy: Seq[String] = Nil,
-    // runtime file skipping on declared skipping columns (q117 parity
-    // for the row formats — their shards come from CALL sys.analyze)
-    skippingCols: Seq[String] = Nil,
-    skipMeta: Option[(StructType, Map[String, String])] = None)
+    layout: GraftLayoutSpec = GraftLayoutSpec())
   extends org.apache.spark.sql.connector.read.ScanBuilder
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
@@ -974,10 +990,16 @@ class GraftFormatScanBuilder(
           .getOrElse(a)
     })
     new GraftFormatScan(spark, format, index, fullSchema, required, rebased,
-      options, bucket, dataFilters, sortedBy, skippingCols, skipMeta)
+      options, dataFilters, layout)
   }
 }
 
+/** The scan [[GraftFormatScanBuilder]] builds. Its bucket layout (q104
+  * follow-through: a BUCKETED avro table gets the same read-side fast
+  * paths as the columnar providers) is [[GraftBucketLayout]], which also
+  * holds the runtime (DPP) partition and skipping filters of an
+  * unbucketed table: this scan never rebuilds its listing, so its stock
+  * planning applies those filters to the static listing instead. */
 class GraftFormatScan(
     spark: org.apache.spark.sql.SparkSession,
     format: org.apache.spark.sql.execution.datasources.FileFormat,
@@ -986,23 +1008,19 @@ class GraftFormatScan(
     required: StructType,
     partitionFilters: Seq[Expression],
     options: Map[String, String],
-    bucket: Option[(Int, String)] = None,
     dataFilters: Seq[Expression] = Nil,
-    sortedBy: Seq[String] = Nil,
-    skippingCols: Seq[String] = Nil,
-    skipMeta: Option[(StructType, Map[String, String])] = None)
+    layoutSpec: GraftLayoutSpec = GraftLayoutSpec())
   extends org.apache.spark.sql.connector.read.Scan
   with org.apache.spark.sql.connector.read.Batch
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsReportOrdering
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.expressions.{Expressions, FieldReference, NamedReference}
+  import org.apache.spark.sql.connector.expressions.{NamedReference, SortOrder}
+  import org.apache.spark.sql.connector.expressions.filter.Predicate
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-  import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
-  import org.apache.spark.sql.execution.PartitionedFileUtil
-  import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory, PartitionedFile}
+  import org.apache.spark.sql.connector.read.partitioning.Partitioning
+  import org.apache.spark.sql.execution.datasources.PartitionDirectory
 
   private val partSet = index.partitionSchema.fieldNames
     .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
@@ -1038,17 +1056,6 @@ class GraftFormatScan(
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
 
-  // ---- bucket layout surface (q104 follow-through: a BUCKETED avro
-  // table gets the same read-side fast paths as the columnar providers)
-  // — mirrors GraftBucketedFileScan: bucket ids recovered from file
-  // names, never trusted on parse failure; pruning from equality/IN on
-  // the bucket key; KeyGroupedPartitioning (with identity prefixes when
-  // the table is also partitioned) under the v2 bucketing conf. All
-  // derived from ONE latched listing so planning and execution agree.
-
-  private lazy val spjActive: Boolean = SQLConf.get.v2BucketingEnabled
-  private val BucketName = "^part-(\\d+)-".r
-
   // data filters thread through to the LISTING so the catalog index's
   // file-level skipping evaluates them (q109 on row formats: the
   // ANALYZE-built synthetic ranges — reader pushdown is still not
@@ -1056,209 +1063,25 @@ class GraftFormatScan(
   private lazy val selected: Seq[PartitionDirectory] =
     index.listFiles(partitionFilters, dataFilters)
 
-  /** (bucket id, file, partition values), or None when unbucketed, the
-    * table is empty, or any file name fails to parse (foreign layout). */
-  private lazy val parsed: Option[Seq[(Int, FileStatusWithMetadata, InternalRow)]] =
-    bucket.flatMap { case (n, _) =>
-      val files = selected.flatMap(d => d.files.map(f => (f, d.values)))
-      val tagged = files.map { case (f, pv) =>
-        BucketName.findFirstMatchIn(f.getPath.getName)
-          .map(_.group(1).toInt).filter(_ < n).map(b => (b, f, pv))
-      }
-      if (tagged.nonEmpty && tagged.forall(_.isDefined)) Some(tagged.map(_.get))
-      else None
-    }
+  // the row reader appends the FULL partition schema to every row
+  private val layout = new GraftBucketLayout(layoutSpec, index.partitionSchema,
+    index.partitionSchema, spark,
+    listing = () => selected, staticFilters = dataFilters)
 
-  private lazy val allowed: Option[Set[Int]] = bucket.flatMap { case (n, col) =>
-    GraftSqlBridge.bucketSetFromFilters(dataFilters, col, n)
-  }
+  override def filterAttributes(): Array[NamedReference] =
+    layout.filterAttributes(readSchema().fieldNames)
 
-  private lazy val pruned: Option[Seq[(Int, FileStatusWithMetadata, InternalRow)]] =
-    parsed.map { fs =>
-      allowed match {
-        case Some(a) => fs.filter { case (b, _, _) => a.contains(b) }
-        case None => fs
-      }
-    }.filter(_.nonEmpty) // empty keyed set → stock planning (no SPJ contract)
+  override def filter(predicates: Array[Predicate]): Unit = layout.filter(predicates)
 
-  private def keyRow(b: Int, pv: InternalRow): InternalRow =
-    if (index.partitionSchema.isEmpty) InternalRow(b)
-    else InternalRow.fromSeq(pv.toSeq(index.partitionSchema) :+ b)
+  override def outputPartitioning(): Partitioning = layout.outputPartitioning
 
-  // ---- runtime (DPP) filtering: R13 parity for the generic format
-  // path — partition-value predicates narrow the latched listing, and
-  // bucket-key values hash to bucket ids (q107's mechanism). Both
-  // arrive after the keyed snapshot latched when SPJ is active, so
-  // there they EMPTY pruned groups' file lists (group count
-  // contractual); without the key contract the files drop outright.
+  override def outputOrdering(): Array[SortOrder] =
+    layout.outputOrdering(readSchema().fieldNames)
 
-  @volatile private var lateFilters: Seq[Expression] = Nil
-  @volatile private var lateBuckets: Option[Set[Int]] = None
-
-  /** RUNTIME FILE SKIPPING on declared skipping columns (q117 parity
-    * for the row formats): runtime `IN`/`=` filters evaluate against
-    * the per-directory shards `CALL sys.analyze` built, and
-    * provably-excluded files drop (or empty out of their keyed groups
-    * on the SPJ path). */
-  @volatile private var lateSkip: Seq[Expression] = Nil
-
-  /** The subset of the full schema the skipping filters bind against:
-    * declared skipping columns that are neither partition nor bucket
-    * keys (those have their own pruning surfaces). */
-  private lazy val skipSchema: StructType = StructType(
-    fullSchema.fields.filter(f =>
-      skippingCols.exists(SQLConf.get.resolver(_, f.name)) &&
-        !index.partitionSchema.fieldNames.exists(SQLConf.get.resolver(_, f.name)) &&
-        !bucket.exists(b => SQLConf.get.resolver(b._2, f.name))))
-
-  /** Partition columns, the bucket column AND the skipping columns,
-    * each only when present in the scan output (`PartitionPruning`
-    * resolves these refs against the output with a THROWING resolver). */
-  override def filterAttributes(): Array[NamedReference] = {
-    val out = readSchema().fieldNames
-    def present(c: String) = out.exists(SQLConf.get.resolver(_, c))
-    (index.partitionSchema.fieldNames.toSeq.filter(present) ++
-      bucket.map(_._2).filter(present) ++
-      (if (skipMeta.isDefined)
-         skipSchema.fieldNames.toSeq.filter(present) else Nil))
-      .map(FieldReference(_)).toArray
-  }
-
-  override def filter(predicates: Array[
-      org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    if (index.partitionSchema.nonEmpty)
-      lateFilters = lateFilters ++ predicates.toSeq.flatMap(
-        GraftSqlBridge.runtimeValueFilter(_, index.partitionSchema))
-    bucket.foreach { case (n, col) =>
-      val sets = predicates.toSeq.flatMap(
-        GraftSqlBridge.bucketIdsFromRuntimePredicate(_, col, n))
-      if (sets.nonEmpty) {
-        val s = sets.reduce(_ intersect _)
-        lateBuckets = Some(lateBuckets.fold(s)(_ intersect s))
-      }
-    }
-    if (skipMeta.isDefined && skipSchema.nonEmpty)
-      lateSkip = lateSkip ++ predicates.toSeq.flatMap(
-        GraftSqlBridge.runtimeValueFilter(_, skipSchema))
-  }
-
-  private def lateKeep(): InternalRow => Boolean =
-    GraftSqlBridge.compilePartitionPredicate(lateFilters, index.partitionSchema)
-
-  /** Per-file survivor test from [[lateSkip]] against the shards (one
-    * shard read per involved dir, memoized inside applySkipping);
-    * identity when nothing arrived, keeps everything on any failure. */
-  private def lateSkipKeep(
-      fs: Seq[(Int, FileStatusWithMetadata, InternalRow)])
-      : FileStatusWithMetadata => Boolean = {
-    val filters = lateSkip
-    skipMeta match {
-      case Some((schema, props)) if filters.nonEmpty =>
-        try {
-          val survivors = graft.catalog.SkipStats.applySkipping(
-            spark, schema, props,
-            fs.map { case (_, f, pv) => PartitionDirectory(pv, Seq(f)) },
-            filters)
-            .iterator.flatMap(_.files).map(_.getPath.toString).toSet
-          f => survivors.contains(f.getPath.toString)
-        } catch { case scala.util.control.NonFatal(_) => _ => true }
-      case _ => _ => true
-    }
-  }
-
-  override def outputPartitioning(): Partitioning = (bucket, pruned) match {
-    case (Some((n, col)), Some(fs)) if spjActive =>
-      new KeyGroupedPartitioning(
-        (index.partitionSchema.fields.map(f => Expressions.identity(f.name):
-            org.apache.spark.sql.connector.expressions.Expression) :+
-          (Expressions.bucket(n, col):
-            org.apache.spark.sql.connector.expressions.Expression)).toArray,
-        fs.map { case (b, _, pv) =>
-          (b, pv.toSeq(index.partitionSchema))
-        }.distinct.size)
-    case _ => new UnknownPartitioning(0)
-  }
-
-  /** Same sort-free-merge-join surface as
-    * [[GraftBucketedFileScan.outputOrdering]]: under the catalog's
-    * sort-trust marker the cluster cols are reported as output ordering
-    * when the keyed path is active (one whole file per input partition;
-    * multi-file buckets are discarded by BatchScanExec's own
-    * preserves-ordering check). */
-  override def outputOrdering(): Array[
-      org.apache.spark.sql.connector.expressions.SortOrder] =
-    if (sortedBy.isEmpty || !spjActive || pruned.isEmpty)
-      Array.empty
-    else {
-      val out = readSchema().fieldNames
-      def present(c: String) = out.exists(SQLConf.get.resolver(_, c))
-      val partCols = index.partitionSchema.fieldNames.toSeq
-      val candidate =
-        if (partCols.nonEmpty && partCols.forall(present)) partCols ++ sortedBy
-        else sortedBy
-      candidate.takeWhile(present).map(c =>
-        Expressions.sort(Expressions.identity(c),
-          org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-        .toArray
-    }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    (pruned, spjActive) match {
-      case (Some(fs), true) =>
-        // whole-file keyed splits: the SPJ key contract forbids ranges.
-        // Late runtime filters (partition values, bucket ids or
-        // shard-excluded files) keep each group's KEY with an emptied
-        // file list.
-        val keep = lateKeep()
-        val bKeep = lateBuckets
-        val sKeep = lateSkipKeep(fs)
-        fs.zipWithIndex.map { case ((b, f, pv), i) =>
-          val files =
-            if (keep(pv) && bKeep.forall(_.contains(b)) && sKeep(f))
-              PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = false,
-                maxSplitBytes = Long.MaxValue, partitionValues = pv).toArray
-            else Array.empty[PartitionedFile]
-          new GraftKeyedFilePartition(i, files, keyRow(b, pv)): InputPartition
-        }.toArray
-      case (Some(fs), false)
-          if allowed.isDefined || lateBuckets.isDefined ||
-            lateFilters.nonEmpty || lateSkip.nonEmpty =>
-        // bucket/partition pruning without the SPJ conf: stock splits
-        // over only the surviving buckets' files — no key contract, so
-        // runtime-excluded files simply drop (a fresh toBatch after
-        // filter() serves purely-runtime narrowing too)
-        val keep = lateKeep()
-        val sKeep = lateSkipKeep(fs)
-        planStock(fs.filter { case (b, f, pv) =>
-          keep(pv) && lateBuckets.forall(_.contains(b)) && sKeep(f)
-        }.map { case (_, f, pv) => PartitionDirectory(pv, Seq(f)) })
-      case _ =>
-        // unbucketed (or foreign-file) listing: runtime partition
-        // predicates narrow the directories, runtime skipping filters
-        // the surviving dirs' files, before split planning
-        val keep = lateKeep()
-        val kept = selected.filter(d => keep(d.values))
-        val dirs =
-          if (lateSkip.isEmpty || skipMeta.isEmpty) kept
-          else {
-            val flat = kept.flatMap(d => d.files.map(f => (0, f, d.values)))
-            val sKeep = lateSkipKeep(flat)
-            kept.map(d => d.copy(files = d.files.filter(sKeep)))
-          }
-        planStock(dirs)
-    }
-
-  private def planStock(dirs: Seq[PartitionDirectory]): Array[InputPartition] = {
-    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
-    val splits = dirs.flatMap { dir =>
-      dir.files.flatMap { f =>
-        PartitionedFileUtil.splitFiles(f, f.getPath,
-          isSplitable = format.isSplitable(spark, options, f.getPath),
-          maxSplitBytes = maxSplit, partitionValues = dir.values)
-      }
-    }.sortBy(_.length)(implicitly[Ordering[Long]].reverse)
-    FilePartition.getFilePartitions(spark, splits, maxSplit)
-      .toArray[InputPartition]
+  override def planInputPartitions(): Array[InputPartition] = {
+    val isSplitable = (p: org.apache.hadoop.fs.Path) => format.isSplitable(spark, options, p)
+    if (layout.ownsPlanning) layout.planSplits(isSplitable)
+    else GraftBucketLayout.packSplits(spark, layout.lateNarrow(selected), isSplitable)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -1363,13 +1186,6 @@ object GraftSqlBridge {
       LogicalRelation(relation))
   }
 
-  /** BUCKET PRUNING's predicate → bucket-set translation, shared by the
-    * columnar bucketed scan and the generic format scan: equality/IN on
-    * the bucket column narrow to the literals' buckets (the math is THE
-    * shared `GraftBucketFunction.bucketId` definition the write routing
-    * uses); a NULL equality literal matches no rows → empty set;
-    * conjuncts of other shapes are ignored — pruning is an
-    * optimization, never a row filter. None = no narrowing. */
   /** Runtime (DPP) `=`/`IN` predicate over one of `partitionSchema`'s
     * columns → a catalyst filter on a fresh by-name attribute (the
     * planner's runtime filters arrive as `IN`/`=` over LiteralValues,
@@ -1455,6 +1271,13 @@ object GraftSqlBridge {
     } catch { case scala.util.control.NonFatal(_) =>
       (_: org.apache.spark.sql.catalyst.InternalRow) => true }
 
+  /** BUCKET PRUNING's predicate → bucket-set translation, used by
+    * [[GraftBucketLayout]]: equality/IN on the bucket column narrow to
+    * the literals' buckets (the math is THE shared
+    * `GraftBucketFunction.bucketId` definition the write routing uses);
+    * a NULL equality literal matches no rows → empty set; conjuncts of
+    * other shapes are ignored — pruning is an optimization, never a row
+    * filter. None = no narrowing. */
   private[graft] def bucketSetFromFilters(
       filters: Seq[Expression], bucketCol: String,
       numBuckets: Int): Option[Set[Int]] = {

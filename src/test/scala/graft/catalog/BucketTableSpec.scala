@@ -609,4 +609,125 @@ class BucketTableSpec extends AnyFunSuite with SparkFixture {
     assert(f.produceResult(org.apache.spark.sql.catalyst.InternalRow(
       8, null)) === nullBucket)
   }
+
+  test("parquet and avro composite scans schedule the same (partition, bucket) files under static, DPP and runtime bucket filters") {
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceRDDPartition}
+    import spark.implicits._
+    val src = Tables(spark, sf0001, "orders")
+      .select($"o_orderkey".as("k"), $"o_totalprice".as("v"), $"o_orderpriority".as("p"))
+    val pq = freshTable("b_agree_pq")
+    val av = freshTable("b_agree_avro")
+    src.writeTo(pq).partitionedBy($"p", bucket(4, $"k")).create()
+    src.writeTo(av).using("avro").partitionedBy($"p", bucket(4, $"k")).create()
+    val keys = src.select($"k").orderBy($"k").limit(3).as[Long].collect().toSeq
+    val dimP = freshTable("b_agree_dim_p")
+    Seq(("1-URGENT", "keep"), ("2-HIGH", "drop"), ("3-MEDIUM", "drop"),
+      ("4-NOT SPECIFIED", "drop"), ("5-LOW", "drop")).toDF("dp", "tag")
+      .writeTo(dimP).create()
+    val dimK = freshTable("b_agree_dim_k")
+    Seq((keys.head, "keep"), (keys.last, "drop")).toDF("dk", "tag").writeTo(dimK).create()
+
+    // the layout scan's executed files as (partition dir, bucket id), and
+    // its reported key-group count (0 = no key-grouped partitioning)
+    def allScans(p: org.apache.spark.sql.execution.SparkPlan): Seq[BatchScanExec] = p match {
+      case s: BatchScanExec => Seq(s)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        allScans(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allScans(q.plan)
+      case other => other.children.flatMap(allScans)
+    }
+    def layoutOf(df: org.apache.spark.sql.DataFrame): (Set[(String, Int)], Int) = {
+      val scan = allScans(df.queryExecution.executedPlan).find(s =>
+        s.scan.isInstanceOf[org.apache.spark.sql.graft.GraftBucketedFileScan] ||
+          s.scan.isInstanceOf[org.apache.spark.sql.graft.GraftFormatScan])
+        .getOrElse(fail(s"no layout scan:\n${df.queryExecution.executedPlan}"))
+      val files = scan.inputRDD.partitions.toSeq.flatMap {
+        case dp: DataSourceRDDPartition => dp.inputPartitions
+      }.collect {
+        case fp: org.apache.spark.sql.execution.datasources.FilePartition => fp
+      }.flatMap(_.files).map { f =>
+        val path = f.toPath
+        (path.getParent.getName, bucketIdOf(path))
+      }.toSet
+      val groups = scan.scan.asInstanceOf[
+          org.apache.spark.sql.connector.read.SupportsReportPartitioning]
+        .outputPartitioning() match {
+        case k: org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning =>
+          k.numPartitions()
+        case _ => 0
+      }
+      (files, groups)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double, String)] =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq.sorted
+
+    val cases: Seq[(String, String => org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("static bucket predicate",
+        t => spark.table(t).filter($"k".isin(keys: _*)).select($"k", $"v", $"p"),
+        src.filter($"k".isin(keys: _*))),
+      ("static bucket predicate + DPP join on p",
+        t => spark.table(t).filter($"k".isin(keys: _*))
+          .join(spark.table(dimP).filter($"tag" === "keep"), $"p" === $"dp")
+          .select($"k", $"v", $"p"),
+        src.filter($"k".isin(keys: _*) && $"p" === "1-URGENT")),
+      ("runtime join on k",
+        t => spark.table(t)
+          .join(spark.table(dimK).filter($"tag" === "keep"), $"k" === $"dk")
+          .select($"k", $"v", $"p"),
+        src.filter($"k" === keys.head)))
+    val conf = "spark.sql.sources.v2.bucketing.enabled"
+    val saved = spark.conf.get(conf)
+    try {
+      for (spj <- Seq("false", "true"); (name, query, expected) <- cases) {
+        spark.conf.set(conf, spj)
+        val want = rows(expected)
+        val Seq((pqFiles, pqGroups), (avFiles, avGroups)) = Seq(pq, av).map { t =>
+          val df = query(t)
+          assert(rows(df) === want, s"$name, SPJ $spj: rows of $t")
+          layoutOf(df)
+        }
+        val label = s"$name, SPJ $spj"
+        assert(pqFiles.nonEmpty, s"$label: no files scheduled")
+        assert(pqFiles === avFiles,
+          s"$label: parquet scheduled ${pqFiles.toSeq.sorted}, avro ${avFiles.toSeq.sorted}")
+        assert(pqGroups === avGroups, s"$label: key groups $pqGroups vs $avGroups")
+        assert((spj == "true") === (pqGroups > 0), s"$label: key groups $pqGroups")
+        if (name.contains("DPP"))
+          assert(pqFiles.forall(_._1 == "p=1-URGENT"), s"$label: DPP kept $pqFiles")
+        if (name.contains("runtime join on k")) {
+          val b = GraftBucketFunction.bucketId(
+            keys.head, org.apache.spark.sql.types.LongType, 4)
+          assert(pqFiles.forall(_._2 == b), s"$label: runtime bucket pruning kept $pqFiles")
+        }
+      }
+    } finally spark.conf.set(conf, saved)
+  }
+
+  test("keyed and bucket-narrowed splits read a later partition column's own values") {
+    import spark.implicits._
+    val src = (0 until 400).map(i => (i.toLong, s"a${i % 2}", s"b${i % 3}")).toDF("k", "a", "b")
+    val pq = freshTable("b_pv_pq")
+    val av = freshTable("b_pv_avro")
+    val spjT = freshTable("b_pv_spj")
+    src.writeTo(pq).partitionedBy($"a", $"b", bucket(4, $"k")).create()
+    src.writeTo(av).using("avro").partitionedBy($"a", $"b", bucket(4, $"k")).create()
+    src.writeTo(spjT).partitionedBy($"a", $"b")
+      .tableProperty(GraftCatalog.SpjProp, "true").create()
+    def kb(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.select($"k", $"b").as[(Long, String)].collect().toSeq.sorted
+    val keys = Seq(5L, 6L, 7L)
+    val conf = "spark.sql.sources.v2.bucketing.enabled"
+    val saved = spark.conf.get(conf)
+    try {
+      for (spj <- Seq("false", "true"); t <- Seq(pq, av, spjT)) {
+        spark.conf.set(conf, spj)
+        // `a` is not read, so a reader materializing only `b` must be
+        // handed b's value, not the first partition column's
+        assert(kb(spark.table(t).filter($"k".isin(keys: _*))) ===
+          kb(src.filter($"k".isin(keys: _*))), s"$t, SPJ $spj: point lookup")
+        assert(kb(spark.table(t)) === kb(src), s"$t, SPJ $spj: full read")
+      }
+    } finally spark.conf.set(conf, saved)
+  }
 }
