@@ -1,23 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark harness (SURVEY.md §6): runs the full declared inventory at
-  * `SPARK_GRAFT_SF_DIR`, prints one JSON line.
+/** The benchmark: runs the full declared inventory at
+  * `SPARK_GRAFT_SF_DIR` through [[Harness.time]] and prints one JSON
+  * line (SURVEY.md §6).
   *
-  * Measurement validity (round-3 verdict, "What's wrong" #2):
-  *  - every query executes through the `noop` sink, which consumes every
-  *    row of the final physical plan — sorts, projections and limits all
-  *    run, unlike `count()` which lets Catalyst prune unreferenced
-  *    columns and drop top-level orderings;
-  *  - one full warm-up pass first, so JIT/codegen compilation and the
-  *    shared FileStatusCache don't land on whichever query happens to run
-  *    first;
-  *  - failures are fail-at-end (round-10 lesson: one crashing query
-  *    aborted the whole run and the round lost ALL timings): a broken
-  *    query is excluded from the timed set, listed in the JSON line's
-  *    `"failed"` field, and the process exits nonzero — it is never
-  *    recorded as a fast success, and it costs only its own timing.
+  * Measurement validity (round-3 verdict, "What's wrong" #2) is the
+  * harness's: every query executes through the `noop` sink, a warm-up
+  * window precedes the min-of-`SPARK_GRAFT_BENCH_PASSES` measured
+  * passes, the suite state is reset between windows, and failures are
+  * fail-at-end (round-10 lesson: one crashing query aborted the whole
+  * run and the round lost ALL timings): a broken query is excluded from
+  * the timed set, listed in the JSON line's `"failed"` field, and the
+  * process exits nonzero — it is never recorded as a fast success.
   *
   * PAIRED modes (round-14 verdict, "Next round" #6): one run captures
   * BOTH sides of BASELINE.md's measurement — the engine path first,
@@ -40,124 +34,23 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.catalog.GraftLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.catalog.GraftLocalFs].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def execute(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-
-    /** Suite-state hygiene BETWEEN queries (round-20 verdict, "What's
-      * wrong" #1 / "Next round" #6): one JVM running 162 queries per
-      * mode accumulates session state that fabricates per-query
-      * outliers — the judge measured q73 at 4.2× in-suite vs 1.19×
-      * isolated. The dominant residue is localCheckpoint blocks:
-      * every checkpoint-using query (the dedup/ANN family, the CC
-      * loop) leaves its materialized blocks in the BlockManager until
-      * the driver GCs the RDD reference and ContextCleaner notices —
-      * storage pressure that taxes whichever queries run next.
-      * Unpersisting all persistent RDDs between queries is safe here
-      * by construction (each execute() builds its plans from scratch;
-      * nothing spans queries except the temp-view REGISTRY, which
-      * holds logical plans, not blocks). Runs OUTSIDE the timed window
-      * — this is a measurement-validity fix (each query is timed
-      * against a clean session, as the per-query isolated probes
-      * measure), not a change of what is timed; see OPTIMIZATION_r21.md.
-      *
-      * SYNCHRONOUS since round 22 (r21 verdict "Next round" #1): the
-      * r21 form used `unpersist(blocking = false)` plus a System.gc()
-      * every 25 slots, which queued 25 queries' worth of shuffle-file
-      * and broadcast removal on the ASYNC ContextCleaner — work that
-      * then ran concurrently with whichever queries followed, the
-      * prime suspect for the driver bench's unexplained q69-q73
-      * blowup (3-12× at 32 cores, right after a GC slot, in no
-      * isolated or 8-core run). Hygiene before a timed window must be
-      * COMPLETE, not fast: blocking unpersist, then a synchronous
-      * per-slot drain of dead shuffles/broadcasts through the cleaner
-      * ([[org.apache.spark.graft.SuiteHygiene]]), then a bounded
-      * listener-bus settle — no async residue can bleed into the next
-      * window, and no 25-slot cleanup burst ever forms. */
-    // Diagnosis aid (round-21 verdict "Next round" #1): per-slot stderr
-    // trace, env-gated, zero effect on the timed window or stdout JSON.
-    val trace = sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1")
-    val slotNo = new java.util.concurrent.atomic.AtomicInteger(0)
-    def resetSuiteState(): Double = {
-      val t0 = System.nanoTime()
-      slotNo.incrementAndGet()
-      org.apache.spark.graft.SuiteHygiene.reset(spark.sparkContext)
-      (System.nanoTime() - t0) / 1e9
-    }
-
+    val spark = Harness.session()
     val allNames = SparkEntry.queries.keys.toSeq.sorted
-    def describe(e: Throwable): String =
-      s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("<no message>")}"
     // Min-of-2 measured passes per query: BASELINE.md documents min-of-2
     // as the jitter-robust statistic for this shared sandbox, where an
     // identical binary varies up to 1.6x run-to-run on a single pass.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
 
-    /** One full mode capture: warm-up pass (unmeasured, NonFatal-tolerant
-      * — an OOM or other JVM-fatal error must still abort the whole run),
-      * then min-of-`passes`. */
-    def timeMode(raw: Boolean)
-        : (Seq[(String, Double)], collection.mutable.LinkedHashMap[String, String]) = {
+    def timeMode(raw: Boolean): Harness.Timings = {
       Tables.setRawMode(raw)
-      val tag = if (raw) "raw" else "engine"
-      val broken = collection.mutable.LinkedHashMap.empty[String, String]
-      allNames.foreach { name =>
-        val w0 = System.nanoTime()
-        try execute(name)
-        catch { case scala.util.control.NonFatal(e) =>
-          broken(name) = describe(e)
-          System.err.println(s"[bench] $tag $name failed in warm-up: ${broken(name)}")
-        }
-        val wSec = (System.nanoTime() - w0) / 1e9
-        val rSec = resetSuiteState()
-        if (trace) System.err.println(
-          f"[trace] $tag warmup slot=${slotNo.get}%d $name%s q=$wSec%.2f reset=$rSec%.2f")
-      }
-      val names = allNames.filterNot(broken.contains)
-      val best = collection.mutable.Map.empty[String, Double]
-      for (p <- 1 to passes; name <- names if !broken.contains(name)) {
-        val t0 = System.nanoTime()
-        try {
-          execute(name)
-          val sec = (System.nanoTime() - t0) / 1e9
-          best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
-          if (trace) System.err.println(
-            f"[trace] $tag pass=$p%d slot=${slotNo.get + 1}%d $name%s q=$sec%.2f")
-        } catch { case scala.util.control.NonFatal(e) =>
-          // a query that survives warm-up but breaks on re-execution
-          // (stateful write paths) is just as broken — drop its timing
-          best.remove(name)
-          broken(name) = describe(e)
-          System.err.println(s"[bench] $tag $name failed in measured pass: ${broken(name)}")
-        }
-        val rSec = resetSuiteState() // outside the timed window — see scaladoc
-        if (trace) System.err.println(
-          f"[trace] $tag pass=$p%d slot=${slotNo.get}%d $name%s reset=$rSec%.2f")
-      }
-      (names.filter(best.contains).map(n => n -> best(n)), broken)
+      Harness.time(allNames, passes, if (raw) "raw" else "engine")(
+        Harness.run(spark, _, sfDir),
+        () => org.apache.spark.graft.SuiteHygiene.reset(spark.sparkContext))
     }
-
-    def fmt(v: Double, decimals: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
 
     // Engine first (see the ordering note in the scaladoc), raw second.
     val rawEnabled = sys.env.getOrElse("SPARK_GRAFT_BENCH_RAW", "1") == "1"
-    val (results, broken) = timeMode(raw = false)
+    val Harness.Timings(results, broken) = timeMode(raw = false)
     if (rawEnabled) {
       // provisional engine-only line — superseded by the paired line
       // below unless the raw pass is killed by a harness wall-clock cap
@@ -168,7 +61,7 @@ object Bench {
 
     // Paired summary fields for the stdout line + the full per-query
     // pairs as a side file (the stdout tail window cannot fit two maps).
-    val rawFields = rawPair.map { case (rawResults, rawBroken) =>
+    val rawFields = rawPair.map { case Harness.Timings(rawResults, rawBroken) =>
       val rawMap = rawResults.toMap
       val common = results.filter { case (n, _) => rawMap.contains(n) }
       val rawTotal = common.map { case (n, _) => rawMap(n) }.sum
@@ -180,7 +73,7 @@ object Bench {
       (s""","raw_total":${fmt(rawTotal, 2)},"raw_n":${common.size}""" +
         s""","ratio":${fmt(ratio, 3)}$failed""")
     }.getOrElse("")
-    rawPair.foreach { case (rawResults, rawBroken) =>
+    rawPair.foreach { case Harness.Timings(rawResults, rawBroken) =>
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAIRED_OUT",
         "bench_paired_latest.json")
       val rawMap = rawResults.toMap
@@ -194,7 +87,7 @@ object Bench {
         s"""{"sfDir":"$sfDir","passes":$passes,"queries":$body,""" +
           s""""raw_failed":$rb,"engine_failed":$eb}""" + "\n")
       catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] could not write $out: ${describe(e)}")
+        System.err.println(s"[bench] could not write $out: ${Harness.describe(e)}")
       }
     }
 
@@ -206,6 +99,9 @@ object Bench {
       sys.exit(1)
     }
   }
+
+  private def fmt(v: Double, decimals: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
 
   /** Render one stdout JSON line within the driver's tail window.
     *
@@ -227,12 +123,10 @@ object Bench {
     * Final fallback (prefix collision AND full names past the cap):
     * drop per-query keys entirely — a total-only line the driver can
     * still parse beats a clipped unparseable one. */
-  private def renderLine(
+  private[graft] def renderLine(
       results: Seq[(String, Double)],
       broken: collection.Map[String, String],
       rawFields: String, sfDir: String): String = {
-    def fmt(v: Double, decimals: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
     val total = results.map(_._2).sum
     // anchored: a digit must follow the dot ('sf1.' must not emit the
     // invalid JSON literal `1.`), and an unrecognizable dir is labeled

@@ -66,8 +66,8 @@ object GraftBootstrap {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     // Fork-free local chmod (see GraftLocalFileSystem). Advisory when set
     // this late — FileSystem instances are cached per scheme, so a JVM
-    // that already resolved `file:` keeps the stock binding; the session
-    // builders (Bench/Verify) set the same key before first use.
+    // that already resolved `file:` keeps the stock binding;
+    // Harness.session sets the same key before first use.
     spark.conf.set("spark.hadoop.fs.file.impl",
       classOf[graft.catalog.GraftLocalFileSystem].getName)
     spark.conf.set("spark.hadoop.fs.AbstractFileSystem.file.impl",
@@ -79,11 +79,16 @@ object GraftBootstrap {
       classOf[graft.catalog.GraftLocalFs].getName)
     stripConfSources(spark.sparkContext.hadoopConfiguration)
     // Imperative twin of GraftExtensions' optimizer-rule injection, for
-    // sessions built without spark.sql.extensions (a static conf): the
-    // V2TableReference re-resolver that makes MERGE-from-a-temp-view
-    // plannable (see ResolveStrandedTableReferences).
+    // sessions built without it in spark.sql.extensions (a static conf):
+    // the V2TableReference re-resolver that makes MERGE-from-a-temp-view
+    // plannable (see ResolveStrandedTableReferences). A session with the
+    // extension already runs the rule. ResolveDeletionVectors has no
+    // twin: it must run before scan pushdown, which the user-provided
+    // optimizer batch comes after, so only the extension installs it.
     val rule = org.apache.spark.sql.graft.ResolveStrandedTableReferences
-    if (!spark.experimental.extraOptimizations.contains(rule)) {
+    val extended = spark.conf.getOption("spark.sql.extensions").exists(
+      _.split(",").map(_.trim).contains(classOf[GraftExtensions].getName))
+    if (!extended && !spark.experimental.extraOptimizations.contains(rule)) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ rule
     }

@@ -1,27 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.catalog.GraftIO
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare (replicated
+  * locally by `tools/check.py`).
+  *
+  * Args: sfDir outDir [prefixes]. The optional third argument is a
+  * comma-separated name-prefix filter ([[select]]) for single-query
+  * iteration (the driver's 2-arg invocation runs all): only the
+  * selected entries run and only their oracle SQL is written, so
+  * check.py checks exactly that subset. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated name-prefix filter for quick
-    // single-query iteration (the driver's 2-arg invocation runs all)
-    val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).headOption
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.catalog.GraftLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.catalog.GraftLocalFs].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir) = args.take(2)
+    val selected = select(SparkEntry.queries.keys, args.drop(2).headOption)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // A crashing query must surface as an error entry, never silently
     // shrink the inventory (round-10 lesson: q54's crash made the round
@@ -31,8 +26,7 @@ object Verify {
     // "not declared".
     var failed = List.empty[String]
     SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.exists(name.startsWith)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       val sentinel = Paths.get(s"$outDir/${name}._error")
       try {
@@ -49,20 +43,10 @@ object Verify {
         Files.writeString(sentinel, msg)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .filter { case (name, _) => selected(name) }
+      .map { case (k, v) => s"${GraftIO.jsonString(k)}: ${GraftIO.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     // summary on stderr; exit 0 regardless — the per-query _error
@@ -73,4 +57,19 @@ object Verify {
         s"[verify] ${failed.size} quer${if (failed.size == 1) "y" else "ies"} " +
           s"failed: ${failed.sorted.mkString(", ")}")
   }
+
+  /** The declared names a comma-separated prefix filter selects; every
+    * name without a filter. A prefix covers whole `_`-separated words, so
+    * `q119` selects `q119_mor_dml` but not `q119b_mor_composite_key`. A
+    * prefix that matches no declared name is an error, so a typo never
+    * passes as an empty check. */
+  private[graft] def select(declared: Iterable[String], filter: Option[String]): Set[String] =
+    filter.fold(declared.toSet) { f =>
+      val prefixes = f.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      def matches(p: String)(name: String) = name == p || name.startsWith(p + "_")
+      val unmatched = prefixes.filterNot(p => declared.exists(matches(p)))
+      require(prefixes.nonEmpty, s"empty query filter '$f'")
+      require(unmatched.isEmpty, s"no declared query matches ${unmatched.mkString(", ")}")
+      declared.filter(n => prefixes.exists(matches(_)(n))).toSet
+    }
 }

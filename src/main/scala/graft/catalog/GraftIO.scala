@@ -1,10 +1,14 @@
 package graft.catalog
 
+import java.nio.charset.StandardCharsets
 import java.util.concurrent.{LinkedBlockingQueue, ThreadFactory, ThreadPoolExecutor, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.ExecutionContext
 import scala.concurrent.duration._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.json4s.{JInt, JLong, JValue}
 
 /** Dedicated bounded pool for driver-side filesystem metadata I/O
   * (footer reads, listing fan-outs) that runs INSIDE a commit's
@@ -21,6 +25,10 @@ import scala.concurrent.duration._
   *
   * Threads are daemons and idle out after 60 s, so an application
   * that never commits pays nothing.
+  *
+  * Also the one copy of the small-file write and read and of the JSON
+  * helpers the metadata sidecars (descriptor, snapshot and skip-stats
+  * manifests, DV manifests) share.
   */
 private[graft] object GraftIO {
 
@@ -78,6 +86,43 @@ private[graft] object GraftIO {
       try out.write(bytes) finally out.close()
     }
   }
+
+  /** `s` as a quoted JSON string literal, escaping backslash, quote and
+    * EVERY control char (< 0x20): a raw tab or CR in a written value
+    * would make a strict reader (json4s for the metadata sidecars,
+    * Python's json.load for Verify's oracle_sql.json) reject the whole
+    * file. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A JSON integer as a Long; None for any other value. */
+  def jsonLong(v: JValue): Option[Long] = v match {
+    case JLong(x) => Some(x)
+    case JInt(x) => Some(x.toLong)
+    case _ => None
+  }
+
+  /** A small metadata file as UTF-8, read to EOF from the one opened
+    * stream instead of trusting a separate getFileStatus length: a
+    * concurrent rename-replace between open and stat would pair the OLD
+    * stream with the NEW length (EOFException or a torn prefix), while
+    * streaming to EOF yields a consistent old-or-new snapshot. */
+  def readSmallFile(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** [[readSmallFile]], or None when `p` does not exist. */
+  def readSmallFileIfExists(fs: FileSystem, p: Path): Option[String] =
+    if (fs.exists(p)) Some(readSmallFile(fs, p)) else None
 
   private val poolSize: Int =
     math.min(32, math.max(8, Runtime.getRuntime.availableProcessors()))

@@ -250,9 +250,8 @@ class GraftTable(
       throw new IllegalStateException(
         s"${name()} has ${meta.deleteVectors.size} live deletion-vector " +
           "batch(es); reading it requires the graft session extension " +
-          "(spark.sql.extensions=graft.GraftExtensions or " +
-          "GraftBootstrap.ensure) so deleted rows are filtered — refusing " +
-          "to serve raw files")
+          "(spark.sql.extensions=graft.GraftExtensions) so deleted rows " +
+          "are filtered — refusing to serve raw files")
     val cache = FileStatusCache.getOrCreate(spark)
     // Partitioned tables ALWAYS scan through the catalog-tracked index —
     // including when the partition list is empty: a plain

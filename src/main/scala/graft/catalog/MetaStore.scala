@@ -558,7 +558,7 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
   private def readFully(p: Path): String = {
     var attempts = 0
     while (true) {
-      try return readOnce(p)
+      try return GraftIO.readSmallFile(fs, p)
       catch {
         // a reader racing writeAtomic's rename-replace on the LOCAL
         // checksummed filesystem can pair the old data stream with the
@@ -598,22 +598,6 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
       }
     }
     sys.error("unreachable")
-  }
-
-  private def readOnce(p: Path): String = {
-    val in = fs.open(p)
-    try {
-      // read to EOF from the opened stream instead of trusting a
-      // separate getFileStatus length: a concurrent writeAtomic
-      // rename-replace between open and stat would pair the OLD stream
-      // with the NEW length (EOFException or a torn prefix). Streaming
-      // to EOF yields a consistent old-or-new snapshot.
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8")
-    } finally in.close()
   }
 
   private def writeAtomic(p: Path, content: String): Unit = {
@@ -741,17 +725,10 @@ object MetaStore {
     JsonMethods.pretty(JsonMethods.render(root))
   }
 
-  private def jlongOpt(v: JValue): Option[Long] = v match {
-    case JLong(x) => Some(x)
-    case JInt(x) => Some(x.toLong)
-    case _ => None
-  }
-
   private def colStatsFromJson(jv: JValue): Map[String, ColumnStatsMeta] = jv match {
     case JObject(cs) => cs.collect {
       case (c, o: JObject) =>
         val cm = o.obj.toMap
-        def jlong(v: JValue): Option[Long] = jlongOpt(v)
         def jstr(v: Option[JValue]): Option[String] =
           v.collect { case JString(s) => s }
         def jdouble(v: JValue): Option[Double] = v match {
@@ -770,7 +747,7 @@ object MetaStore {
                   HistogramBinMeta(
                     bm.get("lo").flatMap(jdouble).getOrElse(0.0),
                     bm.get("hi").flatMap(jdouble).getOrElse(0.0),
-                    bm.get("ndv").flatMap(jlong).getOrElse(0L))
+                    bm.get("ndv").flatMap(GraftIO.jsonLong).getOrElse(0L))
               }
               case _ => Nil
             }
@@ -779,10 +756,11 @@ object MetaStore {
           case _ => None
         }
         c -> ColumnStatsMeta(
-          cm.get("ndv").flatMap(jlong).getOrElse(0L),
-          cm.get("nullCount").flatMap(jlong).getOrElse(0L),
+          cm.get("ndv").flatMap(GraftIO.jsonLong).getOrElse(0L),
+          cm.get("nullCount").flatMap(GraftIO.jsonLong).getOrElse(0L),
           jstr(cm.get("min")), jstr(cm.get("max")),
-          cm.get("avgLen").flatMap(jlong), cm.get("maxLen").flatMap(jlong),
+          cm.get("avgLen").flatMap(GraftIO.jsonLong),
+          cm.get("maxLen").flatMap(GraftIO.jsonLong),
           hist)
     }.toMap
     case _ => Map.empty[String, ColumnStatsMeta]
@@ -791,8 +769,8 @@ object MetaStore {
   private def statsFromJson(jv: JValue): Option[TableStats] = jv match {
       case JObject(fields) =>
         val m = fields.toMap
-        val size = m.get("sizeInBytes").flatMap(jlongOpt).getOrElse(0L)
-        val rows = m.get("numRows").flatMap(jlongOpt)
+        val size = m.get("sizeInBytes").flatMap(GraftIO.jsonLong).getOrElse(0L)
+        val rows = m.get("numRows").flatMap(GraftIO.jsonLong)
         val cols = m.get("colStats").map(colStatsFromJson)
           .getOrElse(Map.empty[String, ColumnStatsMeta])
         Some(TableStats(size, rows, cols))
@@ -802,16 +780,8 @@ object MetaStore {
   private def partsFromJson(jv: JValue): Seq[PartitionMeta] = jv match {
       case JArray(items) => items.map { it =>
         val loc = (it \ "location") match { case JString(v) => Some(v); case _ => None }
-        val size = (it \ "sizeInBytes") match {
-          case JLong(v) => v
-          case JInt(v) => v.toLong
-          case _ => 0L
-        }
-        val rows = (it \ "rowCount") match {
-          case JLong(v) => Some(v)
-          case JInt(v) => Some(v.toLong)
-          case _ => None
-        }
+        val size = GraftIO.jsonLong(it \ "sizeInBytes").getOrElse(0L)
+        val rows = GraftIO.jsonLong(it \ "rowCount")
         PartitionMeta(jsonToMap(it \ "spec"), loc, size, rows,
           colStatsFromJson(it \ "colStats"))
       }
@@ -830,13 +800,8 @@ object MetaStore {
       case JArray(items) => items.flatMap { it =>
         ((it \ "provider"), (it \ "location"), (it \ "retiredAtMs")) match {
           case (JString(pv), JString(lc), ra) =>
-            val at = ra match {
-              case JLong(v) => v
-              case JInt(v) => v.toLong
-              case _ => 0L
-            }
             Some(GenerationMeta(pv, lc, partsFromJson(it \ "partitions"),
-              statsFromJson(it \ "stats"), at))
+              statsFromJson(it \ "stats"), GraftIO.jsonLong(ra).getOrElse(0L)))
           case _ => None
         }
       }
@@ -846,16 +811,8 @@ object MetaStore {
       case JArray(items) => items.collect { case JString(v) => v }
       case _ => Nil
     }
-    val createdAt = (j \ "createdAtMs") match {
-      case JLong(v) => v
-      case JInt(v) => v.toLong
-      case _ => 0L
-    }
-    def jl(v: JValue): Long = v match {
-      case JLong(x) => x
-      case JInt(x) => x.toLong
-      case _ => 0L
-    }
+    def jl(v: JValue): Long = GraftIO.jsonLong(v).getOrElse(0L)
+    val createdAt = jl(j \ "createdAtMs")
     val snapshots: Seq[SnapshotMeta] = (j \ "snapshots") match {
       case JArray(items) => items.flatMap { it =>
         ((it \ "kind"), (it \ "file")) match {

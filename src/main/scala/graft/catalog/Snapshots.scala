@@ -8,6 +8,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
+import graft.catalog.GraftIO.{jsonString => esc}
+
 /** SNAPSHOT-PER-COMMIT TIME TRAVEL (q116) — the Iceberg-snapshot posture
   * the staged-rewrite protocol (q114/q115) half-built, extended to EVERY
   * batch commit: append, truncate, static/dynamic overwrite, DELETE,
@@ -128,16 +130,6 @@ object Snapshots extends Logging {
 
   // ---- JSON IO (hand-rolled writer + json4s reader, the SkipStats shape) ---
 
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private def writeFile(fs: FileSystem, target: Path, body: String): Unit = {
     val tmp = new Path(target.getParent,
       s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
@@ -148,19 +140,6 @@ object Snapshots extends Logging {
       fs.delete(tmp, false); sys.error(s"rename to $target failed")
     }
   }
-
-  private def readText(fs: FileSystem, target: Path): Option[String] =
-    if (!fs.exists(target)) None
-    else {
-      val in = fs.open(target)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(bytes.toString("UTF-8"))
-      } finally in.close()
-    }
 
   private def writeShard(
       fs: FileSystem, target: Path, files: Seq[(String, Long)]): Unit = {
@@ -174,17 +153,12 @@ object Snapshots extends Logging {
       conf: Configuration, path: String): Option[Seq[(String, Long)]] = try {
     import org.json4s._
     val p = new Path(path)
-    readText(p.getFileSystem(conf), p).flatMap { text =>
+    GraftIO.readSmallFileIfExists(p.getFileSystem(conf), p).flatMap { text =>
       org.json4s.jackson.JsonMethods.parse(text) match {
         case JObject(top) => top.collectFirst {
           case ("files", JArray(items)) => items.collect {
             case JArray(List(JString(n), sz)) =>
-              val s = sz match {
-                case JLong(v) => v
-                case JInt(v) => v.toLong
-                case _ => 0L
-              }
-              (n, s)
+              (n, GraftIO.jsonLong(sz).getOrElse(0L))
           }
         }
         case _ => None
@@ -216,17 +190,13 @@ object Snapshots extends Logging {
       conf: Configuration, path: String): Option[Snap] = try {
     import org.json4s._
     val p = new Path(path)
-    readText(p.getFileSystem(conf), p).flatMap { text =>
+    GraftIO.readSmallFileIfExists(p.getFileSystem(conf), p).flatMap { text =>
       org.json4s.jackson.JsonMethods.parse(text) match {
         case o: JObject =>
           val m = o.obj.toMap
           def jstr(k: String): Option[String] =
             m.get(k).collect { case JString(v) => v }
-          def jlong(k: String): Long = m.get(k) match {
-            case Some(JLong(v)) => v
-            case Some(JInt(v)) => v.toLong
-            case _ => 0L
-          }
+          def jlong(k: String): Long = m.get(k).flatMap(GraftIO.jsonLong).getOrElse(0L)
           val dirs = m.get("dirs") match {
             case Some(JArray(items)) => items.flatMap {
               case d: JObject =>
@@ -248,11 +218,7 @@ object Snapshots extends Logging {
             case Some(JArray(items)) => items.flatMap {
               case d: JObject =>
                 val dm = d.obj.toMap
-                def dl(k: String): Long = dm.get(k) match {
-                  case Some(JLong(v)) => v
-                  case Some(JInt(v)) => v.toLong
-                  case _ => 0L
-                }
+                def dl(k: String): Long = dm.get(k).flatMap(GraftIO.jsonLong).getOrElse(0L)
                 for {
                   JString(tok) <- dm.get("token")
                   JString(kc) <- dm.get("keyColumn")

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.catalog.{DvMeta, MetaStore, PartitionMeta, Snapshots, TableMeta}
+import graft.catalog.{DvMeta, GraftIO, MetaStore, PartitionMeta, Snapshots, TableMeta}
 
 /** MERGE-ON-READ row-level DML (q119) — the deletion-vector sibling of
   * the copy-on-write [[GraftRowLevelOperation]], for tables declaring
@@ -614,23 +614,13 @@ private[write] class GraftDeltaWriterFactory(
   * qualified paths of the data files the batch applies to. */
 private[graft] object DvManifest {
 
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def write(
       fs: FileSystem, dir: Path, keyColumn: String,
       appliesTo: Seq[String], keys: Long): Path = {
     val target = new Path(dir, "_manifest.json")
-    val body = "{\"version\":1,\"keyColumn\":" + esc(keyColumn) +
+    val body = "{\"version\":1,\"keyColumn\":" + GraftIO.jsonString(keyColumn) +
       ",\"keys\":" + keys +
-      ",\"appliesTo\":" + appliesTo.map(esc).mkString("[", ",", "]") + "}"
+      ",\"appliesTo\":" + appliesTo.map(GraftIO.jsonString).mkString("[", ",", "]") + "}"
     val tmp = new Path(dir, s"._manifest.${UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, false)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -650,17 +640,7 @@ private[graft] object DvManifest {
       import org.json4s._
       val p = new Path(path)
       val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return None
-      val text = {
-        val in = fs.open(p)
-        try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](64 * 1024)
-          var n = in.read(buf)
-          while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-          bytes.toString("UTF-8")
-        } finally in.close()
-      }
+      val text = GraftIO.readSmallFileIfExists(fs, p).getOrElse(return None)
       org.json4s.jackson.JsonMethods.parse(text) match {
         case o: JObject =>
           val m = o.obj.toMap
@@ -671,12 +651,7 @@ private[graft] object DvManifest {
               case Some(JArray(items)) => items.collect { case JString(s) => s }
               case _ => Nil
             }
-            val keys = m.get("keys") match {
-              case Some(JLong(v)) => v
-              case Some(JInt(v)) => v.toLong
-              case _ => 0L
-            }
-            (kc, applies, keys)
+            (kc, applies, m.get("keys").flatMap(GraftIO.jsonLong).getOrElse(0L))
           }
         case _ => None
       }

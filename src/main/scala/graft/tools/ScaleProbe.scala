@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Harness
 
 /** Scaling-exponent probe (round-14 brief #5): replicate the sf0.1
   * corpus tables `reps`× with content made DISJOINT across replicas,
@@ -164,15 +165,7 @@ object ScaleProbe {
     val base = pos.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (pos.length > 1) pos(1) else "/tmp/graft_scaleprobe"
     val reps = if (pos.length > 2) pos(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     graft.GraftBootstrap.setSessionConfs(spark)
 
     val fs = new org.apache.hadoop.fs.Path(out)
@@ -251,12 +244,8 @@ object ScaleProbe {
       .repartition(8).write.parquet(s"$out/embeddings.parquet")
     } // skipBuild
 
-    def time(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def time(name: String, dir: String): Double =
+      Harness.seconds(Harness.run(spark, name, dir))
     // min-of-2 BOTH sides after a warm-up (the sandbox's documented
     // 1.6x single-pass jitter lands on the exponent otherwise),
     // alternating small/big so neither side owns a hotter machine state
@@ -290,12 +279,8 @@ object ScaleProbe {
       val baseFiles = 16
       val small = build("scale_avro_1x", baseFiles)
       val big = build("scale_avro_rx", baseFiles * reps)
-      def scan(t: String): Double = {
-        val t0 = System.nanoTime()
-        spark.table(t).agg(sum(col("o_totalprice")))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def scan(t: String): Double =
+        Harness.seconds(Harness.run(spark.table(t).agg(sum(col("o_totalprice")))))
       scan(small) // warm-up
       val tSmall = math.min(scan(small), scan(small))
       val tBig = math.min(scan(big), scan(big))

@@ -2,21 +2,26 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+
 import org.apache.spark.graft.SuiteHygiene
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
 
 /** Builder-side isolated timing probe (optimization-round inner loop):
-  * run ONLY the named inventory entries with the bench's exact method
-  * (noop sink, warm-up, min-of-N) in a fresh JVM, and report per query:
-  * wall seconds, job/stage/task counts, summed task time, and (with
-  * SPARK_GRAFT_PROBE_PLANS=dir) the `explain("formatted")` text.
+  * run ONLY the named inventory entries through the bench's own timing
+  * loop ([[Harness.time]]: noop sink, warm-up, min-of-N in pass-major
+  * order, reset between windows) in a fresh JVM, and report per query:
+  * wall seconds and the stage and task counts and summed task time of
+  * its fastest pass, plus (with SPARK_GRAFT_PROBE_PLANS=dir) the
+  * `explain("formatted")` text taken after its warm-up.
   *
-  * Args: sfDir name1 name2 ...  Env: SPARK_GRAFT_CPUS (default 32),
-  * SPARK_GRAFT_PROBE_PASSES (default 3), SPARK_GRAFT_PROBE_PLANS,
-  * SPARK_GRAFT_RAW=1 for the raw side of a paired probe.
+  * Args: sfDir name1 name2 ...  Env: SPARK_GRAFT_CPUS (default 4, as
+  * [[Harness.session]]), SPARK_GRAFT_PROBE_PASSES (default 3),
+  * SPARK_GRAFT_PROBE_PLANS, SPARK_GRAFT_PROBE_STAGES=1 for a per-stage
+  * stderr breakdown, SPARK_GRAFT_RAW=1 for the raw side of a paired
+  * probe. Exits nonzero when an entry fails.
   *
   * This is a diagnosis tool, never the measurement of record — the
   * bench contract stays in [[graft.Bench]]. */
@@ -24,19 +29,10 @@ object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.catalog.GraftLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.catalog.GraftLocalFs].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown quer${if (unknown.size == 1) "y" else "ies"} " +
+      unknown.mkString(", "))
+    val spark = Harness.session()
 
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -68,39 +64,36 @@ object TimeQueries {
     val plansDir = sys.env.get("SPARK_GRAFT_PROBE_PLANS")
     plansDir.foreach(d => new java.io.File(d).mkdirs())
 
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
-      def run(): Unit =
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      run() // warm-up
-      // the bench's between-windows reset, so a probe times what the
-      // bench times
-      SuiteHygiene.reset(spark.sparkContext)
-      plansDir.foreach { d =>
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+    // (seconds, stages, tasks, taskMs) of each entry's fastest pass
+    val fastest = mutable.Map.empty[String, (Double, Int, Int, Long)]
+    def window(name: String, pass: Int, sec: Double): Unit =
+      if (pass == 0) plansDir.foreach { d =>
+        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$d/$name.txt"), plan)
+      } else if (fastest.get(name).forall(sec < _._1)) {
+        // the listener is async; drain the bus deterministically so the
+        // window's stage events are all counted (r21 ADVICE: a fixed
+        // sleep under-counted on busy runs)
+        SuiteHygiene.settle(spark.sparkContext)
+        fastest(name) = (sec, stages.get, tasks.get, taskMs.get)
       }
-      var best = Double.MaxValue
-      var bestStats = (0, 0, 0L)
-      for (_ <- 1 to passes) {
-        stages.set(0); tasks.set(0); taskMs.set(0)
-        val t0 = System.nanoTime()
-        run()
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (sec < best) {
-          best = sec
-          // listener is async; drain the bus deterministically so the
-          // just-finished pass's stage events are all counted (r21
-          // ADVICE: a fixed sleep under-counted on busy runs)
-          SuiteHygiene.settle(spark.sparkContext)
-          bestStats = (stages.get, tasks.get, taskMs.get)
-        }
-        SuiteHygiene.reset(spark.sparkContext)
-      }
-      println(f"[probe] $name%-36s ${best}%7.2f s  stages=${bestStats._1}%3d " +
-        f"tasks=${bestStats._2}%5d taskTime=${bestStats._3 / 1000.0}%8.2f s")
+    // the reset ends with a settle, so zeroing after it starts the next
+    // window's counts clean
+    def reset(): SuiteHygiene.Leftover = {
+      val left = SuiteHygiene.reset(spark.sparkContext)
+      stages.set(0); tasks.set(0); taskMs.set(0)
+      left
     }
+    val timings = Harness.time(names, passes, "probe")(
+      Harness.run(spark, _, sfDir), () => reset(), window)
+    timings.best.foreach { case (name, _) =>
+      val (best, st, tk, ms) = fastest(name)
+      println(f"[probe] $name%-36s ${best}%7.2f s  stages=$st%3d " +
+        f"tasks=$tk%5d taskTime=${ms / 1000.0}%8.2f s")
+    }
+    timings.failed.foreach { case (name, e) => println(s"[probe] $name FAILED: $e") }
     spark.stop()
+    if (timings.failed.nonEmpty) sys.exit(1)
   }
 }

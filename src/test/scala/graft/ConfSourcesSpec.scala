@@ -40,4 +40,14 @@ class ConfSourcesSpec extends AnyFunSuite with SparkFixture {
     assert(back.size() === derived.size(),
       "serialization must preserve every property")
   }
+
+  test("ensure leaves the extension's optimizer rule as the only copy") {
+    // the shared session injects ResolveStrandedTableReferences through
+    // GraftExtensions; the imperative twin must not add a second copy
+    assert(spark.conf.get("spark.sql.extensions").contains("graft.GraftExtensions"))
+    GraftBootstrap.setSessionConfs(spark)
+    GraftBootstrap.ensure(spark, sf0001)
+    assert(!spark.experimental.extraOptimizations.contains(
+      org.apache.spark.sql.graft.ResolveStrandedTableReferences))
+  }
 }

@@ -235,4 +235,14 @@ class MetaStoreSpec extends AnyFunSuite {
     assert(specs === (0 until 40).map(i => s"v$i").toSet,
       s"lost updates across store spellings: ${specs.size}/40 survived")
   }
+
+  test("the shared JSON escaper round-trips quotes, backslashes and control chars") {
+    val raw = "a\"b\\c\td\u0001e"
+    val lit = GraftIO.jsonString(raw)
+    assert(lit === "\"a\\\"b\\\\c\\td\\u0001e\"")
+    org.json4s.jackson.JsonMethods.parse(s"""{"k":$lit}""") match {
+      case org.json4s.JObject(List(("k", org.json4s.JString(back)))) => assert(back === raw)
+      case other => fail(s"unexpected parse: $other")
+    }
+  }
 }

@@ -3,7 +3,11 @@
 
 Usage: python3 tools/check.py [sfDir] [outDir]
 
-Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` already ran.
+Assumes `sbt "runMain graft.Verify <sfDir> <outDir> [prefixes]"` already
+ran; a prefix filter there limits oracle_sql.json, and so this check, to
+the selected entries. Exits 1 on any failure or when there is nothing
+to check.
+
 Registers each /root/testdata parquet as a DuckDB view, runs every
 oracle SQL from outDir/oracle_sql.json, and compares against the
 Spark-written parquet in outDir/<name>/ — columns sorted by name,
@@ -26,6 +30,11 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if not oracle:
+        # an empty check is a broken run (a typo'd Verify filter, a
+        # truncated dump), never a pass
+        print(f"no oracle entries in {out_dir}/oracle_sql.json")
+        sys.exit(1)
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         err_sentinel = os.path.join(out_dir, f"{name}._error")
